@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative connected components over the verified duplicate-pair graph —
@@ -28,8 +28,9 @@ object ConnectedComponents {
     * edges are tiny relative to the corpus in every real dedup run (pairs
     * are rep-level and dup density is sparse), so below this bound the
     * component computation collects the edges once and runs an exact
-    * union-find on the driver — ONE Spark job instead of ~3 jobs × O(log n)
-    * rounds of the distributed loop. Above the gate the distributed
+    * union-find on the driver — two Spark jobs (the edge materialization,
+    * which observes the gate stats, and the collect) instead of ~3 jobs ×
+    * O(log n) rounds of the distributed loop. Above the gate the distributed
     * pointer-jumping loop runs unchanged — the 10^12-scale path is
     * untouched. The row gate alone is NOT sufficient (5M edges of long
     * string ids is gigabytes of driver objects), so it is paired with the
@@ -93,6 +94,39 @@ object ConnectedComponents {
     Array.tabulate(ids.length)(j => (ids(j), minOf.get(find(j))))
   }
 
+  /** An edge set materialized once, carrying the fast path's gate stats:
+    * the row count and the average summed id width, observed on the
+    * materializing job itself (no separate aggregation job). Observed
+    * metrics are at-least-once — a re-executed task can count its rows
+    * twice — which can only push the gate toward the distributed path.
+    * Downstream consumers read the checkpoint, never the observed plan, so
+    * nothing is counted again (the distributed loop unions two
+    * projections of it).
+    */
+  final class EdgeSet private[operators] (val df: DataFrame, val count: Long, val avgPairWidth: Double)
+
+  /** Materialize the (id_a, id_b) columns of `edges` in one job, observing
+    * the gate stats on the way (an empty edge set has width 0.0).
+    */
+  def materialize(edges: DataFrame): EdgeSet = {
+    val obs = Observation()
+    val stats = Seq(count(lit(1)).as("n"), avg(length(col("id_a")) + length(col("id_b"))).as("w"))
+    val df = edges.select(col("id_a"), col("id_b"))
+      .observe(obs, stats.head, stats.tail: _*)
+      .localCheckpoint(eager = true)
+    val row = Observed(obs).getOrElse(df.agg(stats.head, stats.tail: _*).first())
+    new EdgeSet(df, row.getLong(0), if (row.isNullAt(1)) 0.0 else row.getDouble(1))
+  }
+
+  private def gateOf(spark: SparkSession, driverGate: Int): Int =
+    if (driverGate >= 0) driverGate // caller's choice, incl. 0 = disable
+    else spark.conf.get(EdgeGateConfKey, DriverEdgeGate.toString).toInt
+
+  private def stringIds(edges: DataFrame): Boolean =
+    Seq("id_a", "id_b").forall(n =>
+      edges.schema.fields.exists(f =>
+        f.name == n && f.dataType == org.apache.spark.sql.types.StringType))
+
   /** @param edges (id_a, id_b) undirected edges, any orientation
     * @param maxIter safety bound (log₂ of the largest component diameter;
     *                32 covers anything representable)
@@ -102,42 +136,35 @@ object ConnectedComponents {
     *                   only replaces the default)
     * @return (conv_id, cluster_id) for every vertex that appears in an edge
     */
-  def components(edges: DataFrame, maxIter: Int = 32, driverGate: Int = -1): DataFrame = {
+  def components(edges: DataFrame, maxIter: Int = 32, driverGate: Int = -1): DataFrame =
+    // Materialize the (narrow) edge columns once: the collect reads the
+    // checkpoint's in-memory blocks, and on gate overflow the distributed
+    // loop consumes the checkpoint instead of recomputing the whole
+    // upstream pipeline. (limit(gate+1).collect() would be one logical job
+    // but Spark's CollectLimit scale-up re-runs the result stage several
+    // times.)
+    if (gateOf(edges.sparkSession, driverGate) > 0 && stringIds(edges))
+      componentsOf(materialize(edges), maxIter, driverGate)
+    else componentsDistributed(edges, maxIter)
+
+  /** [[components]] over an already-materialized edge set: the fast path
+    * costs exactly one more job (the collect).
+    */
+  def componentsOf(edges: EdgeSet, maxIter: Int = 32, driverGate: Int = -1): DataFrame = {
+    val spark = edges.df.sparkSession
+    val gate = gateOf(spark, driverGate)
     // ---- fast path: bounded collect + exact union-find (string ids) ----
-    val idFieldsAreStrings = Seq("id_a", "id_b").forall(n =>
-      edges.schema.fields.exists(f =>
-        f.name == n && f.dataType == org.apache.spark.sql.types.StringType))
-    val spark = edges.sparkSession
-    val gate =
-      if (driverGate >= 0) driverGate // caller's choice, incl. 0 = disable
-      else spark.conf.get(EdgeGateConfKey, DriverEdgeGate.toString).toInt
-    if (gate > 0 && idFieldsAreStrings) {
-      // Materialize the (narrow) edge columns once: the size probe is then a
-      // free scan of in-memory blocks, the collect below reads the same
-      // blocks, and on gate overflow the distributed loop consumes the
-      // checkpoint instead of recomputing the whole upstream pipeline.
-      // (limit(gate+1).collect() would be one logical job but Spark's
-      // CollectLimit scale-up re-runs the result stage several times.)
-      val edgesM = edges.select(col("id_a"), col("id_b")).localCheckpoint(eager = true)
-      // one narrow pass: row count AND average id width, so the gate is
-      // byte-aware — 5M edges of 8-char ids fit a 4g driver, 5M edges of
-      // 1KB ids do not, and a row count alone cannot tell them apart
-      val stats = edgesM
-        .agg(count(lit(1)), avg(length(col("id_a")) + length(col("id_b"))))
-        .first()
-      val n = stats.getLong(0)
-      val avgWidth = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
-      val budget = spark.conf.get(ByteBudgetConfKey, (Runtime.getRuntime.maxMemory() / 5).toString).toLong
-      if (n <= gate && estimateDriverBytes(n, avgWidth) <= budget) {
-        import spark.implicits._
-        val labeled = unionFindLabels(edgesM.collect().map(r => (r.getString(0), r.getString(1))))
-        // LocalRelation: Catalyst sees the exact (small) size, so downstream
-        // joins against the corpus broadcast this side automatically
-        return labeled.toSeq.toDF("conv_id", "cluster_id")
-      }
-      return componentsDistributed(edgesM, maxIter)
-    }
-    componentsDistributed(edges, maxIter)
+    // the gate is byte-aware — 5M edges of 8-char ids fit a 4g driver, 5M
+    // edges of 1KB ids do not, and a row count alone cannot tell them apart
+    val budget = spark.conf.get(ByteBudgetConfKey, (Runtime.getRuntime.maxMemory() / 5).toString).toLong
+    if (gate > 0 && stringIds(edges.df) && edges.count <= gate &&
+        estimateDriverBytes(edges.count, edges.avgPairWidth) <= budget) {
+      import spark.implicits._
+      val labeled = unionFindLabels(edges.df.collect().map(r => (r.getString(0), r.getString(1))))
+      // LocalRelation: Catalyst sees the exact (small) size, so downstream
+      // joins against the corpus broadcast this side automatically
+      labeled.toSeq.toDF("conv_id", "cluster_id")
+    } else componentsDistributed(edges.df, maxIter)
   }
 
   /** Distributed min-label propagation + pointer jumping — the ≥gate path. */
@@ -195,8 +222,14 @@ object ConnectedComponents {
     * @param allIds DataFrame with a `conv_id` column covering the corpus
     */
   def assign(allIds: DataFrame, edges: DataFrame, maxIter: Int = 32,
-             driverGate: Int = -1): DataFrame = {
-    val comp = components(edges, maxIter, driverGate)
+             driverGate: Int = -1): DataFrame =
+    label(allIds, components(edges, maxIter, driverGate))
+
+  /** [[assign]] over an already-materialized edge set. */
+  def assign(allIds: DataFrame, edges: EdgeSet): DataFrame =
+    label(allIds, componentsOf(edges))
+
+  private def label(allIds: DataFrame, comp: DataFrame): DataFrame =
     allIds
       .select(col("conv_id"))
       .join(comp.withColumnRenamed("cluster_id", "component_id"), Seq("conv_id"), "left")
@@ -205,5 +238,4 @@ object ConnectedComponents {
         coalesce(col("component_id"), col("conv_id")).as("cluster_id")
       )
       .withColumn("is_canonical", (col("conv_id") === col("cluster_id")).cast("boolean"))
-  }
 }

@@ -2,9 +2,11 @@ package graft.plans
 
 import graft.{Dedup, DedupConfig}
 import graft.kernels.Hashing
-import graft.operators.ConnectedComponents
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.operators.{ConnectedComponents, Observed}
+import graft.streaming.StreamingDedup
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 
 /** Durable, resumable run of the dedup pipeline for spark-submit-scale jobs:
@@ -64,23 +66,63 @@ object CheckpointedPipeline {
     * the write just produced replaces a full count() job per stage (the
     * same answer DuckDB's count pushdown would give).
     */
-  private def countFromFooters(spark: SparkSession, dir: String): Long = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
+  private def countFromFooters(spark: SparkSession, dir: String): Long =
+    footerRows(spark, parquetFiles(spark, dir))
+
+  /** Parquet data files under `dir` (recursive: partitionBy writes
+    * subdirs), as qualified URIs — the form `Dataset.inputFiles` reports.
+    */
+  private def parquetFiles(spark: SparkSession, dir: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hadoopConf)
-    val it = fs.listFiles(root, true) // recursive: partitionBy writes subdirs
-    var total = 0L
+    val it = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hadoopConf))
-        try total += reader.getRecordCount
-        finally reader.close()
-      }
+      if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f.getPath.toUri.toString
     }
-    total
+    out.toSeq
   }
+
+  private def withFooter[T](spark: SparkSession, file: String)(f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(new java.net.URI(file)), conf))
+    try f(reader) finally reader.close()
+  }
+
+  /** Exact row count of `files`, summed from their footers on the driver. */
+  private def footerRows(spark: SparkSession, files: Seq[String]): Long =
+    files.map(f => withFooter(spark, f)(_.getRecordCount)).sum
+
+  /** Read a checkpoint directory with its KNOWN schema: no schema-inference
+    * Spark job. A supplied schema would silently read a missing or renamed
+    * column as nulls, so the Spark schema recorded in one data file's footer
+    * is checked against it on the driver first — a column mismatch fails
+    * loudly (partition columns live in the directory names, not the files).
+    */
+  private def readKnown(spark: SparkSession, dir: String, schema: StructType,
+                        partitionCols: Set[String] = Set.empty): DataFrame = {
+    val df = spark.read.schema(schema).parquet(dir)
+    df.inputFiles.headOption.foreach { file =>
+      def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
+      val recorded = withFooter(spark, file)(r => Option(
+        r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+      val expected = shape(StructType(schema.filterNot(f => partitionCols(f.name))))
+      val found = recorded.map(j => shape(DataType.fromJson(j).asInstanceOf[StructType]))
+      require(found.contains(expected),
+        s"schema mismatch in $dir: $file records ${recorded.getOrElse("no Spark schema")} but " +
+          s"${expected.toSeq.sorted.mkString(", ")} is required — rebuild with run()")
+    }
+    df
+  }
+
+  /** Footer key under which Spark records a parquet file's Spark schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Schema of the `clusters/` checkpoint that [[run]] and [[append]] write. */
+  private val ClustersSchema = StructType(Seq(
+    StructField("conv_id", StringType), StructField("cluster_id", StringType),
+    StructField("is_canonical", BooleanType)))
 
   /** A stage checkpoint is reusable iff its lineage exists and records the
     * same config hash + upstream chain (parquet `_SUCCESS` is implied by the
@@ -101,6 +143,12 @@ object CheckpointedPipeline {
     * checkpoints when the same workDir is re-run against different data).
     */
   def inputFingerprint(transcripts: DataFrame): String = {
+    val aggs = fingerprintAggs(transcripts)
+    fingerprintOf(transcripts.agg(aggs.head, aggs.tail: _*).first())
+  }
+
+  /** The aggregate columns of [[inputFingerprint]]: (n, hx, hs). */
+  private def fingerprintAggs(transcripts: DataFrame): Seq[Column] = {
     // Identity columns = everything a checkpointed stage can derive values
     // from: Assembly emits first_ts/last_ts from ts, and a roles-aware
     // assembly reads role — a text-only key would silently reuse stale
@@ -112,12 +160,13 @@ object CheckpointedPipeline {
       (if (transcripts.columns.contains("ts")) Seq(coalesce(col("ts").cast("string"), lit(""))) else Nil) ++
       (if (transcripts.columns.contains("role")) Seq(coalesce(col("role"), lit(""))) else Nil)
     val h = xxhash64(cols: _*)
-    val row = transcripts
-      .agg(
-        count(lit(1)).as("n"),
-        coalesce(bit_xor(h), lit(0L)).as("hx"),
-        coalesce(sum(h.cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("hs"))
-      .first()
+    Seq(
+      count(lit(1)).as("n"),
+      coalesce(bit_xor(h), lit(0L)).as("hx"),
+      coalesce(sum(h.cast("decimal(38,0)")), lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")).as("hs"))
+  }
+
+  private def fingerprintOf(row: Row): String = {
     val hs = java.lang.Long.toHexString(Hashing.hashString(row.get(2).toString))
     s"${row.getLong(0)}-${java.lang.Long.toHexString(row.getLong(1))}-$hs"
   }
@@ -224,7 +273,7 @@ object CheckpointedPipeline {
     *   - new×new candidates take the same exact-collapse → skew-safe scan →
     *     verify path as the full pipeline;
     *   - new×old candidates come from a hot-band-salted band join of the new
-    *     representatives against the checkpointed signatures (the batch form
+    *     representatives against the index's representatives (the batch form
     *     of the streaming stream-vs-index shape — the index is chunked per
     *     hot band, the batch side explodes across the chunks), then exact
     *     verify; the old side is scanned, never re-hashed;
@@ -237,12 +286,33 @@ object CheckpointedPipeline {
     *     combined-corpus scan would add (old×old pairs are already inside
     *     the prior components). Equivalence is sbt-tested.
     *
+    * Passes over the index (`signatures/`), each made once per append:
+    *   1. one listing, when the directory is opened with its known schema
+    *      (no schema-inference job; a footer check keeps a column mismatch
+    *      loud);
+    *   2. the gate scan of its conv_id column (gates (b) and (c) below);
+    *   3. one rep selection: the id-only min(conv_id) per set_hash,
+    *      semi-joined back and materialized as (conv_id, bands) — the
+    *      hot-band gate and the band join both read that checkpoint;
+    *   4. the payload lookup: the shingles of the matched index ids only,
+    *      found by id through a broadcast semi-join.
+    *
     * State afterwards: the new signature rows are APPENDED into
     * `signatures/` (same bucket layout) and `clusters/` is overwritten with
     * the combined labeling; both lineage sidecars are re-keyed to a chained
     * fingerprint hash(prior chain + new-batch fingerprint), so a later
     * `run`/`append` either matches the chain exactly or rebuilds — stale
     * reuse of a mutated checkpoint is impossible.
+    *
+    * The new-batch fingerprint equals [[inputFingerprint]] of the batch but
+    * costs no pass of its own: it is observed (`Dataset.observe`) on the job
+    * that materializes the batch's signatures (only if the listener bus
+    * drops that observation does a pass recompute it). Observed metrics are
+    * at-least-once — a re-executed task can fold its rows in twice — so a
+    * retry can change only the chain hash (into a key nothing matches: a
+    * later run rebuilds), never a gate. No gate reads it: the lineage row
+    * count is summed from the footers of the files this append wrote, and
+    * the gates read the sidecars and the index itself.
     *
     * Mutation-safety gates (the parquet append + two lineage writes are not
     * atomic, so torn state must be DETECTED, not assumed away): before
@@ -265,7 +335,6 @@ object CheckpointedPipeline {
     val cluDir = s"$workDir/clusters"
     require(Files.exists(lineagePath(sigDir)) && Files.exists(lineagePath(cluDir)),
       s"append requires a completed run in $workDir (signatures + clusters lineage)")
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageInfo]
     // the full prior signatures lineage JSON (config hash incl. input
     // fingerprint + row count) is the chain link — any mismatch downstream
     // rebuilds
@@ -292,19 +361,29 @@ object CheckpointedPipeline {
         s"'${strField(priorChain, "bare_config_hash")}' but append was called with " +
         s"'$bareCfgHash' — same DedupConfig and nBuckets are required (or rebuild with run())")
     val priorRows = longField(priorChain, "rows")
-    val newFp = inputFingerprint(newTranscripts)
-    val chainedHash =
-      java.lang.Long.toHexString(Hashing.hashString(priorChain + "+" + newFp)) + "-app-" + newFp
 
     val t0 = System.nanoTime()
-    val oldSigs = spark.read.parquet(sigDir)
-    val newSigs = Dedup.signatures(spark, Dedup.documents(newTranscripts), cfg)
+    // the batch fingerprint is observed on the signature materialization
+    // below instead of costing a pass of its own
+    val fpObs = Observation()
+    val fpAggs = fingerprintAggs(newTranscripts)
+    val batchSigs = Dedup.signatures(spark,
+        Dedup.documents(newTranscripts.observe(fpObs, fpAggs.head, fpAggs.tail: _*)), cfg)
       .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
-      .localCheckpoint(eager = true)
-    val newRows = newSigs.count()
-    // gates (b)+(c) in one pass: index row count vs lineage, and id overlap
-    // with the new batch (conv_id is unique per side, so left-join
-    // multiplicity is ≤1 and count(_new) = |old ids ∩ new ids|)
+    // index pass 1, the listing: the index holds exactly the columns of the
+    // batch's signatures. Its pre-append files are remembered, so the
+    // lineage can count exactly the files this append adds. Both schema
+    // checks run here, before any Spark job.
+    val oldSigs = readKnown(spark, sigDir, batchSigs.schema, partitionCols = Set("bucket"))
+    val indexFiles = oldSigs.inputFiles.toSet
+    val priorClusters = readKnown(spark, cluDir, ClustersSchema)
+    val newSigs = batchSigs.localCheckpoint(eager = true)
+    val newFp = Observed(fpObs).map(fingerprintOf).getOrElse(inputFingerprint(newTranscripts))
+    val chainedHash =
+      java.lang.Long.toHexString(Hashing.hashString(priorChain + "+" + newFp)) + "-app-" + newFp
+    // index pass 2, gates (b)+(c) in one scan: index row count vs lineage,
+    // and id overlap with the new batch (conv_id is unique per side, so
+    // left-join multiplicity is ≤1 and count(_new) = |old ids ∩ new ids|)
     val chk = oldSigs.select(col("conv_id"))
       .join(newSigs.select(col("conv_id")).withColumn("_new", lit(1)), Seq("conv_id"), "left")
       .agg(count(lit(1)).as("n"), count(col("_new")).as("overlap")).first()
@@ -315,7 +394,7 @@ object CheckpointedPipeline {
     require(chk.getLong(1) == 0L,
       s"${chk.getLong(1)} conv_ids in the new batch already exist in the index — append " +
         "requires disjoint conv_ids (redelivered batch?); dedupe upstream or rebuild with run()")
-    stages += StageInfo("signatures_append", newRows, (System.nanoTime() - t0) / 1e9, reused = false)
+    val sigWall = (System.nanoTime() - t0) / 1e9
 
     val t1 = System.nanoTime()
     // exact collapse within the new batch (identical new docs cost m mapping
@@ -353,34 +432,41 @@ object CheckpointedPipeline {
         override def call(): DataFrame = {
           val repIds = groups.select(col("rep").as("conv_id"))
           val newRepSigs = newSigs.join(repIds, Seq("conv_id"), "left_semi")
-          // rep ids only — NOT Dedup.repGroups, whose min_by(struct(conv_id,
-          // bands)) would ship the whole old corpus's bands payload through the
-          // exchange just to be projected away here
+          // index pass 3, the rep selection: rep ids only — NOT
+          // Dedup.repGroups, whose min_by(struct(conv_id, bands)) would ship
+          // the whole old corpus's bands payload through the exchange just
+          // to be projected away here. Materialized once as (conv_id,
+          // bands): the hot-band gate and the band join both read it, where
+          // a lazy subtree would re-run the aggregation for each of them.
           val oldRepIds = oldSigs.groupBy(col("set_hash")).agg(min(col("conv_id")).as("rep"))
             .select(col("rep").as("conv_id"))
-          val oldRepSigs = oldSigs.join(oldRepIds, Seq("conv_id"), "left_semi")
-          graft.streaming.StreamingDedup.nearDupVerified(newRepSigs, oldRepSigs, cfg)
+          val oldRepBands = oldSigs.join(oldRepIds, Seq("conv_id"), "left_semi")
+            .select(col("conv_id"), col("bands"))
+            .localCheckpoint(eager = true)
+          // index pass 4: the matched reps' shingles, looked up by id in the
+          // index itself (its conv_ids are unique — gate (c))
+          StreamingDedup.nearDupVerified(newRepSigs, oldRepBands, cfg, indexPayload = Some(oldSigs))
             .select(col("conv_id").as("id_a"), col("matched_id").as("id_b"))
             .localCheckpoint(true)
         }
       })
       (fNewNew.get(), fNewOld.get())
     } finally pool.shutdown()
-    val priorClusters = spark.read.parquet(cluDir)
     val starOld = priorClusters
       .filter(col("conv_id") =!= col("cluster_id"))
       .select(col("conv_id").as("id_a"), col("cluster_id").as("id_b"))
     val starNew = mappingNew.filter(col("conv_id") =!= col("rep"))
       .select(col("conv_id").as("id_a"), col("rep").as("id_b"))
-    val edges = newNew.unionByName(newOld).unionByName(starOld).unionByName(starNew)
-      .localCheckpoint(eager = true)
-    stages += StageInfo("pairs_increment", edges.count(), (System.nanoTime() - t1) / 1e9, reused = false)
+    // the one edge materialization: its job also observes the edge count
+    // and the components gate stats
+    val edges = ConnectedComponents.materialize(
+      newNew.unionByName(newOld).unionByName(starOld).unionByName(starNew))
+    val pairsWall = (System.nanoTime() - t1) / 1e9
 
     val t2 = System.nanoTime()
     val vertices = priorClusters.select(col("conv_id"))
       .unionByName(newSigs.select(col("conv_id")))
     val clusters = ConnectedComponents.assign(vertices, edges)
-      .withColumn("is_canonical", (col("conv_id") === col("cluster_id")).cast("boolean"))
       .localCheckpoint(eager = true) // detach from cluDir parquet before overwriting it
 
     // persist the combined state: signatures appended in the same bucket
@@ -399,11 +485,14 @@ object CheckpointedPipeline {
     // appended batch adds ≤ one adequately-sized file per bucket instead of
     // (batch partitions × nBuckets) small ones
     newSigs.hint("rebalance", col("bucket")).write.mode(SaveMode.Append).partitionBy("bucket").parquet(sigDir)
+    // exact, from the footers of the files this append added — never from
+    // an observation, since the next append's gate (b) checks against it
+    val newRows = footerRows(spark, parquetFiles(spark, sigDir).filterNot(indexFiles))
     writeLineage(sigDir, "signatures", chainedHash, "transcripts+append",
       priorRows + newRows, (System.nanoTime() - t0) / 1e9, nBuckets, bareCfgHash)
     clusters.write.mode(SaveMode.Overwrite).parquet(cluDir)
-    val out = spark.read.parquet(cluDir)
-    val rows = countFromFooters(spark, cluDir)
+    val out = readKnown(spark, cluDir, ClustersSchema)
+    val rows = footerRows(spark, out.inputFiles.toSeq)
     // cand_metrics_scope: these counters instrument the new×new
     // CandidatePairs scan only — the new×old chunked band join is not
     // instrumented, so the salted work of the dominant daily-ingest path is
@@ -412,7 +501,9 @@ object CheckpointedPipeline {
       (System.nanoTime() - t2) / 1e9, nBuckets, bareCfgHash,
       extra = s""","cand_metrics_scope":"new_x_new_only","hot_buckets":${candMetrics.hotBuckets.value},"hot_postings":${candMetrics.hotPostings.value},"salted_pairs":${candMetrics.saltedPairs.value}""")
     Files.deleteIfExists(dirtyPath(workDir))
-    stages += StageInfo("clusters", rows, (System.nanoTime() - t2) / 1e9, reused = false)
-    (out, stages.toSeq)
+    (out, Seq(
+      StageInfo("signatures_append", newRows, sigWall, reused = false),
+      StageInfo("pairs_increment", edges.count, pairsWall, reused = false),
+      StageInfo("clusters", rows, (System.nanoTime() - t2) / 1e9, reused = false)))
   }
 }

@@ -195,11 +195,19 @@ object StreamingDedup {
     * not — and the batch-side payload join is micro-batch-sized by
     * definition. One payload-carrying exchange per side, both bounded by
     * candidate density.
+    *
+    * @param indexPayload where the matched ids' `shingles` are looked up
+    *                     (default: `indexSigs`). A caller whose band index
+    *                     is a materialized `(conv_id, bands)` subset of a
+    *                     larger table passes that table here, so the band
+    *                     index need not carry the payload; its conv_ids
+    *                     must be unique.
     */
-  def nearDupVerified(batchSigs: DataFrame, indexSigs: DataFrame, cfg: DedupConfig): DataFrame = {
+  def nearDupVerified(batchSigs: DataFrame, indexSigs: DataFrame, cfg: DedupConfig,
+                      indexPayload: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val cands = nearDupAgainstIndex(batchSigs, indexSigs, cfg).localCheckpoint(true)
-    val idxPayload = indexSigs
+    val idxPayload = indexPayload.getOrElse(indexSigs)
       .select(col("conv_id").as("matched_id"), col("shingles").as("sh_i"))
       .join(broadcast(cands.select(col("matched_id")).distinct()), Seq("matched_id"), "left_semi")
     val batchPayload = batchSigs.select(col("conv_id"), col("shingles").as("sh_s"))

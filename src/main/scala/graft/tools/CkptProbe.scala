@@ -20,50 +20,23 @@ object CkptProbe {
 
   /** Counts jobs/stages/tasks + summed task time between marks — the
     * fixed-overhead attribution the UI would give (it is disabled here).
+    * The per-job lines come from [[QProbe.JobCounter]].
     */
   private final class Counter extends org.apache.spark.scheduler.SparkListener {
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong
-    private val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val jobTaskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet()
-      jobDesc.put(j.jobId, Option(j.properties.getProperty("spark.job.description")).getOrElse("?"))
-      jobStart.put(j.jobId, j.time)
-      j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
-      jobTaskMs.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
-      ()
-    }
-    override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val dur = j.time - jobStart.getOrDefault(j.jobId, j.time)
-      val tms = Option(jobTaskMs.get(j.jobId)).map(_.get).getOrElse(0L)
-      jobLog.add(f"job=${j.jobId}%4d wall=${dur / 1000.0}%6.2f taskSec=${tms / 1000.0}%7.2f desc=${jobDesc.getOrDefault(j.jobId, "?")}")
-      ()
-    }
+    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      { jobs.incrementAndGet(); () }
     override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
       { stages.incrementAndGet(); () }
     override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       tasks.incrementAndGet()
-      if (t.taskInfo != null) {
-        taskMs.addAndGet(t.taskInfo.duration)
-        val jid = stageJob.getOrDefault(t.stageId, -1)
-        val a = jobTaskMs.get(jid)
-        if (a != null) { a.addAndGet(t.taskInfo.duration); () }
-      }
+      if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
       ()
     }
     def snap(): (Long, Long, Long, Long) = (jobs.get, stages.get, tasks.get, taskMs.get)
-    def drainJobs(): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var s = jobLog.poll()
-      while (s != null) { out += s; s = jobLog.poll() }
-      out.toSeq
-    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -85,7 +58,9 @@ object CkptProbe {
     graft.Dedup.pipeline(spark, graft.sources.TranscriptGen.df(spark, 5000L), DedupConfig()).count()
 
     val counter = new Counter
+    val perJob = new QProbe.JobCounter
     spark.sparkContext.addSparkListener(counter)
+    spark.sparkContext.addSparkListener(perJob)
     def mark[T](label: String)(f: => T): T = {
       val (j0, s0, t0, m0) = counter.snap()
       val (r, w) = time(f)
@@ -93,14 +68,16 @@ object CkptProbe {
       Thread.sleep(150)
       val (j1, s1, t1, m1) = counter.snap()
       println(f"[marks] $label%-28s wall=$w%6.2f jobs=${j1 - j0}%3d stages=${s1 - s0}%3d tasks=${t1 - t0}%5d taskSec=${(m1 - m0) / 1000.0}%7.2f")
-      counter.drainJobs().foreach(l => println(s"[jobs]   $l"))
+      perJob.drain().foreach(l => println(s"[jobs]   $l"))
       r
     }
 
     val reps = if (args.nonEmpty) args(0).toInt else 2
+    // work dirs live under the same tmpfs-or-/tmp scratch as spark.local.dir
+    val scratchDir = Files.createDirectories(Paths.get(scratch))
     for (rep <- 1 to reps) {
       // ---- q_checkpointed_clusters shape ----
-      val work = Files.createTempDirectory(Paths.get("/dev/shm"), "graft-probe-q").toString
+      val work = Files.createTempDirectory(scratchDir, "graft-probe-q").toString
       val (ts, tTs) = time {
         graft.SparkEntry.queries // force object init
         mark("ts")(eventTranscripts(spark, sfDir).localCheckpoint(true))
@@ -115,7 +92,7 @@ object CkptProbe {
         s"stages1=${s1.map(st => f"${st.name}:${st.wallSec}%.2f").mkString(",")}")
 
       // ---- q_incremental_clusters shape ----
-      val work2 = Files.createTempDirectory(Paths.get("/dev/shm"), "graft-probe-i").toString
+      val work2 = Files.createTempDirectory(scratchDir, "graft-probe-i").toString
       val (ts2, tTs2) = time(eventTranscripts(spark, sfDir).localCheckpoint(true))
       val (r1, tIdx) = time(mark("incr:index")(CheckpointedPipeline.run(spark, ts2.filter(col("conv_id").startsWith("u")),
         DedupConfig(), work2, nBuckets = 16)))

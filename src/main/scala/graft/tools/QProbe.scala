@@ -54,7 +54,14 @@ object QProbe {
     spark.stop()
   }
 
+  /** One log line per finished job: wall, tasks, summed task time and a
+    * label — the job description if set, else the call site (file:line)
+    * of the SQL execution that submitted it (adaptive query stages run as
+    * jobs of their own, whose result stage names only a pool thread), else
+    * the result stage's name.
+    */
   final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+    private val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     private val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
@@ -62,12 +69,20 @@ object QProbe {
     private val jobTasks = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
     private val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobDesc.put(j.jobId, Option(j.properties.getProperty("spark.job.description")).getOrElse("-"))
+      jobDesc.put(j.jobId, Option(j.properties.getProperty("spark.job.description"))
+        .orElse(Option(j.properties.getProperty("spark.sql.execution.id"))
+          .flatMap(id => Option(execSite.get(id.toLong))))
+        .orElse(j.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("-"))
       jobStart.put(j.jobId, j.time)
       j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
       jobTaskMs.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
       jobTasks.put(j.jobId, new java.util.concurrent.atomic.AtomicLong)
       ()
+    }
+    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        execSite.put(s.executionId, s.description); ()
+      case _ => ()
     }
     override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
       val dur = j.time - jobStart.getOrDefault(j.jobId, j.time)

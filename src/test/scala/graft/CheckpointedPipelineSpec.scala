@@ -37,6 +37,21 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
   private def clustersMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.select("conv_id", "cluster_id").collect().map(r => (r.getString(0), r.getString(1))).toMap
 
+  /** The incremental fixture: every block's near-dup (pos 7) and noisy copy
+    * (pos 8) arrive after their original (pos 6) is indexed.
+    */
+  private def splitCorpus() = {
+    val allT = TranscriptGen.df(spark, 400L)
+    val pos = pmod(substring(col("conv_id"), 6, 8).cast("long"), lit(10))
+    (allT.filter(pos <= 6 || pos === 9), allT.filter(pos === 7), allT.filter(pos === 8))
+  }
+
+  private def lineageField(dir: String, name: String): String = {
+    val json = Files.readString(Paths.get(dir, "_lineage.json"))
+    (s""""$name":"?([^",}]*)""").r.findFirstMatchIn(json).map(_.group(1))
+      .getOrElse(fail(s"no $name in $json"))
+  }
+
   test("fresh run writes all stages with lineage; rerun reuses every checkpoint; results identical") {
     val cfg = DedupConfig()
     val transcripts = TranscriptGen.df(spark, 400L)
@@ -77,10 +92,7 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
     // the daily-ingest shape, with guaranteed cross-batch merges
     val cfg = DedupConfig()
     val allT = TranscriptGen.df(spark, 400L)
-    val pos = pmod(substring(col("conv_id"), 6, 8).cast("long"), lit(10))
-    val old = allT.filter(pos <= 6 || pos === 9)
-    val batch1 = allT.filter(pos === 7)
-    val batch2 = allT.filter(pos === 8)
+    val (old, batch1, batch2) = splitCorpus()
 
     val wdFull = Files.createTempDirectory("graft-ckpt-full").toString
     val wdInc = Files.createTempDirectory("graft-ckpt-inc").toString
@@ -89,10 +101,28 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
       val fullMap = clustersMap(full)
 
       CheckpointedPipeline.run(spark, old, cfg, wdInc, nBuckets = 8)
-      val (_, st1) = CheckpointedPipeline.append(spark, batch1, cfg, wdInc, nBuckets = 8)
+      // each append's lineage: the chain hash built from the fingerprint it
+      // observed equals the one built from the public inputFingerprint pass,
+      // and the footer-summed row counts equal full scans of the directories
+      def appendChecked(batch: org.apache.spark.sql.DataFrame) = {
+        val priorChain = Files.readString(Paths.get(wdInc, "signatures", "_lineage.json"))
+        val (out, st) = CheckpointedPipeline.append(spark, batch, cfg, wdInc, nBuckets = 8)
+        val fp = CheckpointedPipeline.inputFingerprint(batch)
+        val chained = java.lang.Long.toHexString(
+          graft.kernels.Hashing.hashString(priorChain + "+" + fp)) + "-app-" + fp
+        lineageField(s"$wdInc/signatures", "config_hash") shouldBe chained
+        lineageField(s"$wdInc/clusters", "config_hash") shouldBe chained
+        lineageField(s"$wdInc/signatures", "rows").toLong shouldBe spark.read.parquet(s"$wdInc/signatures").count()
+        lineageField(s"$wdInc/clusters", "rows").toLong shouldBe spark.read.parquet(s"$wdInc/clusters").count()
+        // the known-schema read returns what schema inference would
+        out.schema shouldBe spark.read.parquet(s"$wdInc/clusters").schema
+        st.head.rows shouldBe batch.select("conv_id").distinct().count()
+        (out, st)
+      }
+      val (_, st1) = appendChecked(batch1)
       st1.map(_.name) shouldBe Seq("signatures_append", "pairs_increment", "clusters")
       // chained append: the second batch runs against the mutated state
-      val (inc, _) = CheckpointedPipeline.append(spark, batch2, cfg, wdInc, nBuckets = 8)
+      val (inc, _) = appendChecked(batch2)
       val incMap = clustersMap(inc)
 
       incMap shouldBe fullMap
@@ -181,6 +211,19 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
       e3.getMessage should include("different config hashes")
       Files.writeString(cluLineage, goodClu)
 
+      // a checkpoint column that no longer matches: the known-schema read
+      // would see nulls, so the footer check must refuse instead
+      val cluDir = s"$wd/clusters"
+      val goodCluRows = spark.read.parquet(cluDir).localCheckpoint(eager = true)
+      goodCluRows.withColumnRenamed("cluster_id", "cid").write.mode("overwrite").parquet(cluDir)
+      Files.writeString(cluLineage, goodClu)
+      val e4 = intercept[IllegalArgumentException] {
+        CheckpointedPipeline.append(spark, more, cfg, wd, nBuckets = 2)
+      }
+      e4.getMessage should include("schema mismatch")
+      goodCluRows.write.mode("overwrite").parquet(cluDir)
+      Files.writeString(cluLineage, goodClu)
+
       // state restored: a valid append still works
       val (after, _) = CheckpointedPipeline.append(spark, more, cfg, wd, nBuckets = 2)
       clustersMap(after).keySet shouldBe Set("A", "B", "C")
@@ -265,6 +308,45 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
         all(st2.map(_.reused)) shouldBe true
         CheckpointedPipeline.append(spark, batch, cfg, wd2, nBuckets = 2)
       } finally new Directory(new java.io.File(wd2)).deleteRecursively()
+    } finally new Directory(new java.io.File(wd)).deleteRecursively()
+  }
+
+  test("append under driverEdgeGate = 0 gives the driver path's clusters and pairs_increment count") {
+    val cfg = DedupConfig()
+    val (old, batch1, _) = splitCorpus()
+    def appendOnce(gateConf: Option[String]): (Map[String, String], Seq[CheckpointedPipeline.StageInfo]) = {
+      val wd = Files.createTempDirectory("graft-ckpt-gate0").toString
+      try {
+        CheckpointedPipeline.run(spark, old, cfg, wd, nBuckets = 8)
+        gateConf.foreach(spark.conf.set(graft.operators.ConnectedComponents.EdgeGateConfKey, _))
+        try {
+          val (out, st) = CheckpointedPipeline.append(spark, batch1, cfg, wd, nBuckets = 8)
+          (clustersMap(out), st)
+        } finally spark.conf.unset(graft.operators.ConnectedComponents.EdgeGateConfKey)
+      } finally new Directory(new java.io.File(wd)).deleteRecursively()
+    }
+    val (driverMap, driverSt) = appendOnce(None)
+    val (distMap, distSt) = appendOnce(Some("0"))
+    distMap shouldBe driverMap
+    // the distributed loop unions two projections of the edge set: the
+    // observed edge count must still be counted once
+    val edgeRows = driverSt.find(_.name == "pairs_increment").get.rows
+    edgeRows should be > 0L
+    distSt.find(_.name == "pairs_increment").get.rows shouldBe edgeRows
+  }
+
+  test("job budget: one append stays within its pinned Spark job count") {
+    val cfg = DedupConfig()
+    val (old, batch1, _) = splitCorpus()
+    val wd = Files.createTempDirectory("graft-ckpt-jobs").toString
+    try {
+      CheckpointedPipeline.run(spark, old, cfg, wd, nBuckets = 8)
+      val (_, jobs) = JobBudget(spark)(CheckpointedPipeline.append(spark, batch1, cfg, wd, nBuckets = 8))
+      // measured: 53 jobs when the fingerprint, the batch row count, the
+      // schema inferences, the edge count, the components stats and the
+      // lazy index rep subtree each ran their own jobs; 38 with each index
+      // pass and gate run once. A new job in append must show up here.
+      withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size should be <= 38 }
     } finally new Directory(new java.io.File(wd)).deleteRecursively()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.TranscriptGen
 import graft.operators.ConnectedComponents
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -200,5 +200,45 @@ class DedupPipelineSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
     ConnectedComponents.estimateDriverBytes(5_000_000L, 24.0) should be < budget16g
     ConnectedComponents.estimateDriverBytes(5_000_000L, 24.0) should be > budget4g
     ConnectedComponents.estimateDriverBytes(5_000_000L, 2000.0) should be > budget16g
+  }
+
+  test("components gate stats observed on the edge materialization equal the aggregation they replace") {
+    val s = spark
+    import s.implicits._
+    // the separate stats job the observation replaced
+    def aggStats(edges: org.apache.spark.sql.DataFrame): (Long, Double) = {
+      val r = edges.agg(count(lit(1)),
+        avg(functions.length(col("id_a")) + functions.length(col("id_b")))).first()
+      (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+    }
+    def pad(id: String): String = id * 100
+    val chain = (0 until 19).map(i => (f"a${i + 1}%02d", f"a$i%02d"))
+    val clique = for (i <- 0 until 5; j <- i + 1 until 5) yield (s"b$j", s"b$i")
+    val fixtures = Seq(
+      "chain + clique" -> (chain ++ clique ++ Seq(("y", "x"), ("x", "w"))).toList.toDF("id_a", "id_b"),
+      "long ids" -> (0 until 19).map(i => (pad(f"a$i%02d"), pad(f"a${i + 1}%02d"))).toList.toDF("id_a", "id_b"),
+      "empty" -> Seq.empty[(String, String)].toDF("id_a", "id_b"))
+    val observed = fixtures.map { case (name, edges) =>
+      val m = ConnectedComponents.materialize(edges)
+      withClue(name) { (m.count, m.avgPairWidth) shouldBe aggStats(edges) }
+      name -> m
+    }.toMap
+    // empty: avg is null, so the width is 0.0 and the fast path stays open
+    (observed("empty").count, observed("empty").avgPairWidth) shouldBe ((0L, 0.0))
+    ConnectedComponents.componentsOf(observed("empty")).count() shouldBe 0L
+    // long ids: the observed width is what overflows the byte budget
+    observed("long ids").avgPairWidth shouldBe 600.0
+    ConnectedComponents.estimateDriverBytes(observed("long ids").count, observed("long ids").avgPairWidth) should be > 1000L
+  }
+
+  test("job budget: the components fast path on an already-materialized edge set runs exactly 2 jobs") {
+    val s = spark
+    import s.implicits._
+    val chain = (0 until 19).map(i => (f"a${i + 1}%02d", f"a$i%02d"))
+    val edges = chain.toList.toDF("id_a", "id_b").localCheckpoint(eager = true)
+    // the edge materialization (which observes the gate stats) + the collect
+    val (comp, jobs) = JobBudget(spark)(ConnectedComponents.components(edges))
+    withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size shouldBe 2 }
+    comp.collect().map(_.getString(1)).toSet shouldBe Set("a00")
   }
 }
