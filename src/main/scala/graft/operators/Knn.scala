@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.kernels.CosineLshModel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** k-nearest-neighbor operators over an embedding column
@@ -39,9 +39,10 @@ object Knn {
     * cosine stays NaN, exactly as before), null or length-mismatched input
     * → null (zip_with padded the shorter side with nulls, which nulled the
     * whole sum) — so every scored value is bit-for-bit unchanged
-    * (mismatches=0 over the full corpus pair set, tools/SimBench).
+    * (mismatches=0 over the full corpus pair set, tools/SimBench). The LSH
+    * knn scans call the same functions directly.
     */
-  private val cosineUdf = udf { (a: Array[Float], b: Array[Float]) =>
+  private[graft] def cosine(a: Array[Float], b: Array[Float]): java.lang.Double =
     if (a == null || b == null || a.length != b.length) null
     else {
       var dp = 0.0; var n1 = 0.0; var n2 = 0.0; var i = 0
@@ -50,9 +51,8 @@ object Knn {
         dp += x * y; n1 += x * x; n2 += y * y
         i += 1
       }
-      (dp / math.sqrt(n1 * n2)): java.lang.Double
+      dp / math.sqrt(n1 * n2)
     }
-  }
 
   private val dotUdf = udf { (a: Array[Float], b: Array[Float]) =>
     if (a == null || b == null || a.length != b.length) null
@@ -63,14 +63,22 @@ object Knn {
     }
   }
 
-  private val l2DistUdf = udf { (a: Array[Float], b: Array[Float]) =>
+  private def l2Dist(a: Array[Float], b: Array[Float]): java.lang.Double =
     if (a == null || b == null || a.length != b.length) null
     else {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-      (math.sqrt(s): java.lang.Double)
+      math.sqrt(s)
     }
+
+  /** 1/(1+dist), the arithmetic of [[l2SimColC]]. */
+  private[graft] def l2Sim(a: Array[Float], b: Array[Float]): java.lang.Double = {
+    val d = l2Dist(a, b)
+    if (d == null) null else 1.0 / (1.0 + d)
   }
+
+  private val cosineUdf = udf(cosine _)
+  private val l2DistUdf = udf(l2Dist _)
 
   private val l1DistUdf = udf { (a: Array[Float], b: Array[Float]) =>
     if (a == null || b == null || a.length != b.length) null
@@ -99,8 +107,6 @@ object Knn {
 
   /** L2 similarity 1/(1+dist) ≙ `ExactModel.l2Similarity`. */
   def l2SimColC(a: Column, b: Column): Column = lit(1.0) / (lit(1.0) + l2DistColC(a, b))
-
-  def l2SimCol(a: String, b: String): Column = l2SimColC(col(a), col(b))
 
   /** L1 similarity 1/(1+dist) ≙ `ExactModel.l1Similarity`. */
   def l1SimColC(a: Column, b: Column): Column = lit(1.0) / (lit(1.0) + l1DistColC(a, b))
@@ -219,50 +225,15 @@ object Knn {
     * candidates = pairs sharing ≥1 band bucket; exact cosine re-score;
     * per-query top-k. Recall grows with L and shrinks with rowsPerBand
     * exactly as in the reference (`RecallSuite.scala:59-91`).
+    * One [[ProbeScan]]: the corpus is read once, hashed and scored per
+    * partition into the [[TopKAgg]] partials, so at most k rows per (query,
+    * partition) are exchanged. `dims ≤ 0` takes d from the collected queries.
     */
   def lshTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame, k: Int,
               numTables: Int = 64, rowsPerBand: Int = 4, seed: Long = 0L,
               dims: Int = -1): DataFrame = {
-    import spark.implicits._
-    // dims ≤ 0 → probe the corpus (a LIMIT-1 scan, but still a serialized
-    // plan-time Spark job); callers that know the schema dims (S2's
-    // validation does) should pass it explicitly.
-    val d = if (dims > 0) dims else corpus.select(size(col("embedding"))).first().getInt(0)
-
-    def withBands(df: DataFrame, idCol: String): DataFrame = {
-      val in = df.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
-      in.mapPartitions { iter =>
-        val model = new CosineLshModel(d, numTables, rowsPerBand, seed) // hoisted once per partition
-        iter.flatMap { case (id, emb) => model.hash(emb).map(b => (id, b)) }
-      }.toDF(idCol, "band")
-    }
-
-    val qBands = withBands(queries, "q_id")
-    val cBands = withBands(corpus, "n_id")
-    // Skew-safe candidate join via an EXPLICIT broadcast of the query
-    // bands: the knn contract is a small query side (exactTopK broadcasts
-    // it already), and with the probe broadcast there is NO join shuffle
-    // key for a hot corpus band (zero-vector clique, dense near-dup
-    // family) to concentrate on — the (members × hits) blow-up lands
-    // inside the corpus partition that holds the bucket, and the hit-count
-    // exchange is keyed by (q_id, n_id) pairs, never by band. The explicit
-    // hint matters: the banded sides are mapPartitions outputs whose size
-    // estimates can make the planner shuffle BOTH sides (the previous
-    // plain join's hazard — VERDICT #3/r5). Large-query-set callers should
-    // route through StreamingDedup.bandHitsAgainstIndex (the chunked-index
-    // guard) instead; OperatorsSpec pins the hot-clique case.
-    val cands = broadcast(qBands).join(cBands, Seq("band"))
-      .filter(col("q_id") =!= col("n_id"))
-      .groupBy("q_id", "n_id")
-      .agg(count(lit(1)).as("matching_bands")) // C2 hit counting
-
-    val q = queries.select(col("vec_id").cast("long").as("q_id"), col("embedding").as("q_emb"))
-    val c = corpus.select(col("vec_id").cast("long").as("n_id"), col("embedding").as("n_emb"))
-    val scored = cands
-      .join(broadcast(q), Seq("q_id"))
-      .join(c, Seq("n_id"))
-      .withColumn("sim", cosineCol("q_emb", "n_emb")) // C5 exact re-score
-    topK(scored.select("q_id", "n_id", "sim"), k)
+    val hash = (d: Int) => { val m = new CosineLshModel(d, numTables, rowsPerBand, seed); m.hash _ }
+    topK(ProbeScan.knnScored(queries, corpus, dims, numTables, hash, hash, cosine), k)
   }
 
   /** L2 (p-stable) LSH knn with optional multiprobe — ≙ the reference's
@@ -270,37 +241,17 @@ object Knn {
     * The corpus is indexed unprobed; queries emit `probes` extra perturbed
     * buckets per table (Qin et al. shift/expand heap, [[graft.kernels.L2LshModel.hashWithProbes]]),
     * raising recall at fixed L without reindexing. Candidates = distinct
-    * bucket-sharing pairs; exact 1/(1+dist) re-score; bounded top-k.
+    * bucket-sharing pairs; exact 1/(1+dist) re-score; bounded top-k — the
+    * same [[ProbeScan]] shape as [[lshTopK]].
     */
   def l2LshTopK(spark: SparkSession, queries: DataFrame, corpus: DataFrame, k: Int,
                 numTables: Int = 24, rowsPerBand: Int = 2, w: Int = 4, probes: Int = 0,
                 seed: Long = 0L, dims: Int = -1): DataFrame = {
-    import spark.implicits._
-    val d = if (dims > 0) dims else corpus.select(size(col("embedding"))).first().getInt(0)
-    def banded(df: DataFrame, idCol: String, p: Int): DataFrame =
-      df.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
-        .mapPartitions { iter =>
-          val model = new graft.kernels.L2LshModel(d, numTables, rowsPerBand, w, seed)
-          iter.flatMap { case (id, e) =>
-            (if (p > 0) model.hashWithProbes(e, p) else model.hash(e)).map(b => (id, b))
-          }
-        }.toDF(idCol, "band")
-    // probed query hashes can repeat a bucket (perturbations wrapping back);
-    // distinct so a (q, n) pair is counted once per *bucket*, as unprobed is
-    val q = { val b = banded(queries, "q_id", probes); if (probes > 0) b.distinct() else b }
-    val c = banded(corpus, "n_id", 0)
-    // same skew-safe broadcast-probe shape as [[lshTopK]] (no band shuffle
-    // key exists for a hot corpus bucket to concentrate on)
-    val cands = broadcast(q).join(c, Seq("band"))
-      .filter(col("q_id") =!= col("n_id"))
-      .select("q_id", "n_id").distinct()
-    val qv = queries.select(col("vec_id").cast("long").as("q_id"), col("embedding").as("q_emb"))
-    val cv = corpus.select(col("vec_id").cast("long").as("n_id"), col("embedding").as("n_emb"))
-    val scored = cands
-      .join(broadcast(qv), Seq("q_id"))
-      .join(cv, Seq("n_id"))
-      .withColumn("sim", simColC(Similarity.L2, col("q_emb"), col("n_emb")))
-    topK(scored.select("q_id", "n_id", "sim"), k)
+    def hash(p: Int)(d: Int): Array[Float] => Array[Long] = {
+      val m = new graft.kernels.L2LshModel(d, numTables, rowsPerBand, w, seed)
+      if (p > 0) m.hashWithProbes(_, p) else m.hash _
+    }
+    topK(ProbeScan.knnScored(queries, corpus, dims, numTables * (1 + probes), hash(probes), hash(0), l2Sim), k)
   }
 
   /** Permutation-LSH top-k — ≙ `NearestNeighborsQuery.PermutationLsh` with

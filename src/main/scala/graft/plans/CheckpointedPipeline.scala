@@ -2,8 +2,7 @@ package graft.plans
 
 import graft.{Dedup, DedupConfig}
 import graft.kernels.Hashing
-import graft.operators.{ConnectedComponents, Observed}
-import graft.streaming.StreamingDedup
+import graft.operators.{ConnectedComponents, Observed, ProbeScan}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
@@ -272,11 +271,11 @@ object CheckpointedPipeline {
     *   - the signature kernel runs over the new batch only;
     *   - new×new candidates take the same exact-collapse → skew-safe scan →
     *     verify path as the full pipeline;
-    *   - new×old candidates come from a hot-band-salted band join of the new
-    *     representatives against the index's representatives (the batch form
-    *     of the streaming stream-vs-index shape — the index is chunked per
-    *     hot band, the batch side explodes across the chunks), then exact
-    *     verify; the old side is scanned, never re-hashed;
+    *   - new×old pairs come from one probe scan of the index against the
+    *     broadcast band table of the new representatives (the streaming
+    *     probe-vs-index operator), verified inline and kept as one edge
+    *     per old exact-duplicate group; the old side is scanned, never
+    *     re-hashed or exchanged;
     *   - clusters merge through connected components over the prior
     *     (member → cluster_id) star edges plus the new verified pairs. A new
     *     doc that bridges two old clusters merges them, exactly as a full
@@ -291,11 +290,11 @@ object CheckpointedPipeline {
     *      (no schema-inference job; a footer check keeps a column mismatch
     *      loud);
     *   2. the gate scan of its conv_id column (gates (b) and (c) below);
-    *   3. one rep selection: the id-only min(conv_id) per set_hash,
-    *      semi-joined back and materialized as (conv_id, bands) — the
-    *      hot-band gate and the band join both read that checkpoint;
-    *   4. the payload lookup: the shingles of the matched index ids only,
-    *      found by id through a broadcast semi-join.
+    *   3. the new×old probe scan: one narrow read of every member's
+    *      (conv_id, bands, shingles, set_hash) against the broadcast band
+    *      table of the batch's reps, verifying hits inline
+    *      ([[graft.operators.ProbeScan]]); nothing of the index is
+    *      exchanged.
     *
     * State afterwards: the new signature rows are APPENDED into
     * `signatures/` (same bucket layout) and `clusters/` is overwritten with
@@ -419,34 +418,21 @@ object CheckpointedPipeline {
             .select(col("id_a"), col("id_b"))
             .localCheckpoint(true)
       })
-      // new reps vs the checkpointed index: salted stream-vs-index band join +
-      // exact verify (master-agnostic — the same operator the streaming
-      // surface runs). The index side is exact-collapsed to ITS reps first:
-      // the band join explodes L postings per index row, so probing reps
-      // instead of members shrinks the dominant exchange by the old corpus's
-      // duplication factor (a giant old exact-dup family — empty docs,
-      // boilerplate — costs one rep, and the old star edges already connect
-      // its members). Connectivity is unchanged: an edge to any member of an
-      // old component closes the same cluster as an edge to its rep.
+      // new reps vs the checkpointed index: one probe scan (the operator the
+      // streaming surface runs) reads every old member's bands and shingles
+      // once, narrowly, and verifies its hits inline. Old exact duplicates
+      // share bands and shingles, so a new rep matches all of an old
+      // set_hash group or none of it; the minimum matched id per (new rep,
+      // set_hash) is that group's rep — one edge per group, and the old star
+      // edges connect its members.
       val fNewOld = pool.submit(new java.util.concurrent.Callable[DataFrame] {
         override def call(): DataFrame = {
-          val repIds = groups.select(col("rep").as("conv_id"))
-          val newRepSigs = newSigs.join(repIds, Seq("conv_id"), "left_semi")
-          // index pass 3, the rep selection: rep ids only — NOT
-          // Dedup.repGroups, whose min_by(struct(conv_id, bands)) would ship
-          // the whole old corpus's bands payload through the exchange just
-          // to be projected away here. Materialized once as (conv_id,
-          // bands): the hot-band gate and the band join both read it, where
-          // a lazy subtree would re-run the aggregation for each of them.
-          val oldRepIds = oldSigs.groupBy(col("set_hash")).agg(min(col("conv_id")).as("rep"))
-            .select(col("rep").as("conv_id"))
-          val oldRepBands = oldSigs.join(oldRepIds, Seq("conv_id"), "left_semi")
-            .select(col("conv_id"), col("bands"))
-            .localCheckpoint(eager = true)
-          // index pass 4: the matched reps' shingles, looked up by id in the
-          // index itself (its conv_ids are unique — gate (c))
-          StreamingDedup.nearDupVerified(newRepSigs, oldRepBands, cfg, indexPayload = Some(oldSigs))
-            .select(col("conv_id").as("id_a"), col("matched_id").as("id_b"))
+          val newRepSigs = newSigs.join(groups.select(col("rep").as("conv_id")), Seq("conv_id"), "left_semi")
+          // index pass 3: the probe scan
+          ProbeScan.textPairs(newRepSigs, oldSigs, cfg.minBands, Some(cfg.theta), matchedKey = Some("set_hash"))
+            .groupBy(col("conv_id").as("id_a"), col("matched_key"))
+            .agg(min(col("matched_id")).as("id_b"))
+            .select(col("id_a"), col("id_b"))
             .localCheckpoint(true)
         }
       })
@@ -494,9 +480,9 @@ object CheckpointedPipeline {
     val out = readKnown(spark, cluDir, ClustersSchema)
     val rows = footerRows(spark, out.inputFiles.toSeq)
     // cand_metrics_scope: these counters instrument the new×new
-    // CandidatePairs scan only — the new×old chunked band join is not
-    // instrumented, so the salted work of the dominant daily-ingest path is
-    // NOT included (labeled rather than silently understated)
+    // CandidatePairs scan, the only candidate path with hot buckets and
+    // salting — the new×old probe scan has neither (its probe side is a
+    // broadcast band table, so no bucket is ever a join key)
     writeLineage(cluDir, "clusters", chainedHash, s"pairs/$chainedHash", rows,
       (System.nanoTime() - t2) / 1e9, nBuckets, bareCfgHash,
       extra = s""","cand_metrics_scope":"new_x_new_only","hot_buckets":${candMetrics.hotBuckets.value},"hot_postings":${candMetrics.hotPostings.value},"salted_pairs":${candMetrics.saltedPairs.value}""")

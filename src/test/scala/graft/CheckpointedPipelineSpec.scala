@@ -345,8 +345,9 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
       // measured: 53 jobs when the fingerprint, the batch row count, the
       // schema inferences, the edge count, the components stats and the
       // lazy index rep subtree each ran their own jobs; 38 with each index
-      // pass and gate run once. A new job in append must show up here.
-      withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size should be <= 38 }
+      // pass and gate run once; 22 with the new×old branch as one probe
+      // scan. A new job in append must show up here.
+      withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size should be <= 22 }
     } finally new Directory(new java.io.File(wd)).deleteRecursively()
   }
 }

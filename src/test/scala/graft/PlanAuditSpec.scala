@@ -137,37 +137,25 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     exchanges.filter(_.contains("band")).foreach(b => b should not include "shingles")
   }
 
-  test("incremental append's old side: rep aggregation moves no bands payload; new×old join has no cartesian") {
-    import org.apache.spark.sql.functions.{col, min}
-    val cfg = DedupConfig()
+  test("probe scans: no exchange carries bands, shingles or embedding; no cartesian") {
     val sigs = Dedup.signatures(spark,
-      Dedup.documents(graft.sources.TranscriptGen.df(spark, 100L).toDF()), cfg).localCheckpoint(true)
-    // mirror CheckpointedPipeline.append's old-side shapes: the rep-id
-    // derivation must aggregate (set_hash, conv_id) only — Dedup.repGroups'
-    // min_by(struct(conv_id, bands)) would ship the whole index's bands
-    // through the exchange just to be projected away
-    val oldRepIds = sigs.groupBy(col("set_hash")).agg(min(col("conv_id")).as("rep"))
-      .select(col("rep").as("conv_id"))
-    val p1 = oldRepIds.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    val repExchanges = p1.split("\\n\\(\\d+\\) ").toSeq
-      .filter(b => b.startsWith("Exchange") || b.startsWith("AQEShuffleRead"))
-    repExchanges should not be empty
-    repExchanges.foreach { b =>
-      b should not include "bands"
-      b should not include "shingles"
+      Dedup.documents(graft.sources.TranscriptGen.df(spark, 100L).toDF()), DedupConfig()).localCheckpoint(true)
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // the index side of nearDupVerified (the stream surface and append's
+    // new×old branch) and of lshTopK is scanned narrowly, never exchanged
+    for (df <- Seq(graft.streaming.StreamingDedup.nearDupVerified(sigs, sigs, DedupConfig()),
+                   graft.operators.Knn.lshTopK(spark, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 20), emb, 5))) {
+      val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      p should not include "CartesianProduct"
+      p should not include "BroadcastNestedLoopJoin"
+      p.split("\\n\\(\\d+\\) ").toSeq
+        .filter(b => b.startsWith("Exchange") || b.startsWith("AQEShuffleRead"))
+        .foreach { b =>
+          b should not include "bands"
+          b should not include "shingles"
+          b should not include "embedding"
+        }
     }
-    // the new×old candidate join (the batch replay of the stream-vs-index
-    // operator append uses): skew-chunked band join, no cartesian, band
-    // exchanges free of the shingle payload
-    val oldRepSigs = sigs.join(oldRepIds, Seq("conv_id"), "left_semi")
-    val p2 = graft.streaming.StreamingDedup.nearDupVerified(sigs, oldRepSigs, cfg)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    p2 should not include "CartesianProduct"
-    p2 should not include "BroadcastNestedLoopJoin"
-    p2.split("\\n\\(\\d+\\) ").toSeq
-      .filter(b => b.startsWith("Exchange") || b.startsWith("AQEShuffleRead"))
-      .filter(_.contains("band"))
-      .foreach(b => b should not include "shingles")
   }
 
   test("the flagship pipeline contains no CartesianProduct or BroadcastNestedLoopJoin") {

@@ -3,7 +3,7 @@ package graft
 import graft.kernels.ExactSim
 import graft.operators._
 import graft.streaming.StreamingDedup
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -11,7 +11,7 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Round-5 surfaces: the skew-safe SimHash path (pairs + clusters),
   * similarity-parameterized exact knn, the L2/multiprobe/permutation knn
-  * dispatch through the Queries AST, the salted stream-static band join,
+  * dispatch through the Queries AST, the stream-static probe scan,
   * and the per-bucket duplicate-id dedupe contract.
   */
 class QueryDispatchSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
@@ -143,22 +143,29 @@ class QueryDispatchSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
     perm.columns should contain("score")
   }
 
-  test("salted stream-static near-dup join equals the unsalted join (hot index band forced)") {
+  test("near-dup probe scan equals the exploded posting join (hot, repeated band)") {
     val s = spark
     import s.implicits._
-    // index with one hot band (60 members on band 1) + per-doc unique bands;
-    // stream docs hit the hot band and a few unique ones
-    val index = (0 until 60).map(i => (f"i$i%03d", Array(1L, 100L + i, 200L + i)))
-      .toDF("conv_id", "bands")
-    val stream = (0 until 8).map(i => (f"s$i%03d", Array(1L, 100L + i * 2, 999L)))
-      .toDF("conv_id", "bands")
-    def runWith(cap: Int): Set[(String, String, Int)] =
-      StreamingDedup.nearDupAgainstIndex(stream, index, DedupConfig(minBands = 1, bucketCap = cap))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-    val unsalted = runWith(100000) // no band exceeds the cap → g=1 everywhere
-    val salted = runWith(4)        // hot band fans out over ceil(60/4)=15 salts
-    unsalted should not be empty
-    salted shouldBe unsalted
+    // index with one hot band (60 members on band 1) + per-doc unique bands,
+    // and one doc carrying band 500 twice; stream docs hit the hot band and
+    // a few unique ones, and one carries band 500 twice too
+    val index = ((0 until 60).map(i => (f"i$i%03d", Array(1L, 100L + i, 200L + i))) :+
+      ("irep", Array(500L, 1L, 500L))).toDF("conv_id", "bands")
+    val stream = ((0 until 8).map(i => (f"s$i%03d", Array(1L, 100L + i * 2, 999L))) :+
+      ("srep", Array(500L, 500L, 100L))).toDF("conv_id", "bands")
+    // the posting join: one row per (stream posting, index posting) on a band
+    val postingJoin = stream.select(col("conv_id"), explode(col("bands")).as("band"))
+      .join(index.select(col("conv_id").as("matched_id"), explode(col("bands")).as("band")), "band")
+      .filter(col("conv_id") =!= col("matched_id"))
+      .groupBy("conv_id", "matched_id").count()
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1), r.getAs[Number](2).intValue)).toSet
+    for (minBands <- Seq(1, 2)) withClue(s"minBands=$minBands: ") {
+      val got = rows(StreamingDedup.nearDupAgainstIndex(stream, index, DedupConfig(minBands = minBands)))
+      got shouldBe rows(postingJoin.filter(col("count") >= minBands))
+      got should not be empty
+    }
+    // occurrences multiply: band 500 is 2 stream × 2 index postings
+    rows(StreamingDedup.nearDupAgainstIndex(stream, index, DedupConfig(minBands = 1))) should contain(("srep", "irep", 4))
   }
 
   test("duplicate postings in one bucket count one matching band, not several (both paths)") {
