@@ -100,7 +100,7 @@ object Dedup {
     // bands (see repGroups); materialized because both consumers need it.
     // Only (conv_id, bands) of each representative feeds candidates: the
     // shingle payload is KB/row vs ~0.5 KB of bands, and verify re-attaches
-    // it member-reduced from the checkpointed sigs anyway (candidate
+    // it from the checkpointed sigs in its pair scan anyway (candidate
     // members are always reps). Shuffling the payload through the rep
     // selection was the single most expensive stage at 300k convs.
     val groups = repGroups(sigs).localCheckpoint(eager = true)

@@ -26,9 +26,6 @@ import graft.kernels.Shingler
   * @param theta          verify threshold θ on exact Jaccard (≙ C5 exact re-score filter)
   * @param bucketCap      max ids per LSH bucket before salted splitting kicks in (§7.4 skew)
   * @param simHashBands   bands for the 64-bit SimHash fingerprint path (must divide 64)
-  * @param broadcastVerifyIds broadcast the candidate-member id set to
-  *                       semi-join-reduce the verify payload (disable when
-  *                       dup density makes the id set ~ the corpus)
   */
 final case class DedupConfig(
     shingleK: Int = 3,
@@ -39,6 +36,5 @@ final case class DedupConfig(
     minBands: Int = 8,
     theta: Double = 0.8,
     bucketCap: Int = 512,
-    simHashBands: Int = 8,
-    broadcastVerifyIds: Boolean = true
+    simHashBands: Int = 8
 ) extends Serializable

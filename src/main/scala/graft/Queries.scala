@@ -102,7 +102,7 @@ object Queries {
         // Dedup.pipeline / CheckpointedPipeline now.
         val groups = Dedup.repGroups(sigs).localCheckpoint(eager = true)
         val mapping = Dedup.mappingFrom(sigs, groups)
-        // bands-only rep aggregation; payload re-attached member-reduced in
+        // bands-only rep aggregation; payload read in place by the pair scan in
         // verify (same shape as Dedup.pipeline)
         val verified = Dedup.verify(Dedup.candidates(groups.select(col("rep").as("conv_id"), col("bands")), cfg), sigs, cfg)
         // one row per group already — no distinct shuffle needed

@@ -431,7 +431,7 @@ object SparkEntry {
       // shingle-hash set folded onto a fixed 0..dims universe: the
       // ≙Vec.SparseBool form the reference's HammingLshModel consumes
       // materialized ONCE: without the checkpoint the shingle kernel + the
-      // fold ran three times (banding plus each verify join side)
+      // fold ran three times (banding plus the verify scan's two reads)
       val sets = shinglesForDocs(s, dir)
         .select(col("conv_id").cast("long").as("doc_id"), col("shingles"))
         .as[(Long, Array[Long])]
@@ -454,26 +454,14 @@ object SparkEntry {
         iter.map { case (id, idx) => (f"$id%012d", model.hash(idx)) }
       }.toDF("conv_id", "bands")
       val cands = CandidatePairs.candidatePairs(banded, docCfg.copy(minBands = 8))
-        .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"),
-          col("matching_bands").cast("long").as("matching_bands"))
-        .localCheckpoint(true)
-      val hammingSim = udf { (a: Array[Int], b: Array[Int]) =>
-        graft.kernels.ExactSim.hamming(a.map(_.toLong), b.map(_.toLong), dims.toLong)
-      }
-      // VerifyPairs discipline: reduce the index-set table to candidate
-      // members before any of it moves, stream members against the
-      // broadcast pair list, one member-bounded shuffled join
-      val ids = cands.select(col("id_a").as("doc_id"))
-        .unionByName(cands.select(col("id_b").as("doc_id")))
-      val members = sets.join(broadcast(ids.distinct()), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      members.select(col("doc_id").as("id_a"), col("true_indices").as("t_a"))
-        .join(broadcast(cands), Seq("id_a"))
-        .hint("shuffle_hash")
-        .join(members.select(col("doc_id").as("id_b"), col("true_indices").as("t_b")), Seq("id_b"))
-        .withColumn("hamming_sim", hammingSim(col("t_a"), col("t_b")))
-        .filter(col("hamming_sim") >= 0.85)
-        .select("id_a", "id_b", "matching_bands", "hamming_sim")
+        .select(col("id_a").cast("long"), col("id_b").cast("long"), col("matching_bands").cast("long"))
+      // exact Hamming verify in one narrow scan of the index sets (the
+      // shared pair-scoring scan: no index-set array is exchanged)
+      operators.ProbeScan.pairScores(cands.as[(Long, Long, Long)], sets.as[(Long, Array[Int])],
+          (t: Array[Int]) => 4L * t.length) { (a, b, bands, ta, tb) =>
+        val sim = graft.kernels.ExactSim.hamming(ta.map(_.toLong), tb.map(_.toLong), dims.toLong)
+        if (sim >= 0.85) Some((a, b, bands, sim)) else None
+      }.toDF("id_a", "id_b", "matching_bands", "hamming_sim")
     }),
 
     // ---- L2 LSH (stable distributions, H4) knn with exact re-score,

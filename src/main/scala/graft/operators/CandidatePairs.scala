@@ -3,6 +3,7 @@ package graft.operators
 import graft.DedupConfig
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Candidate-pair generation: the batch re-grounding of the reference's
   * inverted-index read path.
@@ -123,39 +124,20 @@ object CandidatePairs {
     override def next(): T = { if (pending.isEmpty) advance(); pending.next() }
   }
 
-  /** All unordered candidate pairs (id_a < id_b) with the number of
-    * matching bands. Complete (no recall loss from capping).
+  /** The fused small-bucket scan of [[candidatePairs]]: explode → exchange
+    * → sort → run scan → map-side partial agg → exchange → final agg,
+    * materialized eagerly (the output is the smallest set in the operator).
+    * Every oversized run is skipped, and its band value recorded on the way.
     *
-    * Shape (common, no-hot-band case — ONE fused pass, nothing
-    * materialized but the aggregated candidates): the posting rows take
-    * one hash exchange, a Tungsten sort by band, and a streaming run scan
-    * that enumerates each small (≤ bucketCap) bucket STRAIGHT INTO the
-    * hit-count aggregation's map-side partials. The eager materialization
-    * of the aggregated output (bounded by candidate density — orders of
-    * magnitude below the raw pair stream) doubles as the hot-band probe:
-    * the scan counts oversized runs into an accumulator, and only when
-    * that count is non-zero does the salted block-join subtree get built
-    * at all, re-deriving the hot postings from the source (a second
-    * explode+sort pass, paid ONLY on hot corpora). Earlier shapes either
-    * checkpointed the full enumerated pair stream (quadratic in bucket
-    * sizes — 2.5M rows vs 114k postings on the events corpus, the
-    * dominant cost of the stage) or checkpointed the postings and
-    * re-scanned them per consumer (~20 s of the narrow-width 600k-conv
-    * candidate phase); this shape stores neither.
-    *
-    * No counts aggregation, no count join, no band self-join (the round-4
-    * join shape re-read the postings exchange up to 4x and probed a
-    * bucket-count hash relation per read). The scan buffers at most one
-    * run AND at most bucketCap+1 rows — memory is O(bucketCap) regardless
-    * of how hot a band is.
+    * @return (id_a, id_b, small_bands) over the small buckets, and the bands
+    *         of the skipped runs — at most one per hot run; a retried task
+    *         can only repeat a value, which the set absorbs
     */
-  def candidatePairs(sigs: DataFrame, cfg: DedupConfig,
-                     metrics: Option[CandidateMetrics] = None): DataFrame = {
+  private[graft] def smallScan(sigs: DataFrame, cfg: DedupConfig,
+                               metrics: Option[CandidateMetrics]): (DataFrame, Set[Long]) = {
     val spark = sigs.sparkSession
     import spark.implicits._
-
     val cap = cfg.bucketCap
-    val outerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
     // EXPLICIT partition count: AQE sizes post-shuffle partitions by the
     // exchanged posting BYTES, but this exchange feeds a pair enumeration
     // whose output is quadratic in bucket sizes — on a corpus with many
@@ -168,32 +150,23 @@ object CandidatePairs {
     // partition either way — extra partitions only separate DIFFERENT
     // buckets, so width x 2 captures the available spread).
     val scanParts = math.max(2, spark.sparkContext.defaultParallelism * 2)
-    def postings = sigs
+    val postings = sigs
       .select(col("conv_id"), explode(col("bands")).as("band"))
       .repartition(scanParts, col("band"))
       .sortWithinPartitions(col("band"))
       .select(col("band"), col("conv_id")).as[(Long, String)]
-
-    // The gate accumulator: the pair scan counts oversized runs as it
-    // skips them. At-least-once semantics (a retried task can re-count)
-    // can only inflate a non-zero value — a zero reading proves no hot
-    // band exists, which is all the branch below needs.
-    val hotRunGate = spark.sparkContext.longAccumulator("graft.candidates.hot_runs")
-
-    // ---- the fused scan: explode -> exchange -> sort -> run scan ->
-    //      map-side partial agg -> exchange -> final agg, materialized
-    //      eagerly (the output is the smallest set in the operator and
-    //      verify re-checkpoints candidates anyway) ----
+    val hotBands = spark.sparkContext.collectionAccumulator[Long]("graft.candidates.hot_bands")
+    val outerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
     spark.sparkContext.setJobDescription("candidates:scan")
     val smallAgg = postings
       .mapPartitions { iter =>
         new RunScan[(String, String)](iter, cap,
-          emit = (_, ids0, overflowed) =>
+          emit = (band, ids0, overflowed) =>
             if (overflowed) {
-              // hot runs pair up in the salted path; count them for the
-              // gate + the lineage metrics (this scan always runs exactly
-              // once — the salted subtree never touches the counters)
-              hotRunGate.add(1)
+              // hot runs pair up in the salted path; record the band for it
+              // and count the run for the lineage metrics (this scan always
+              // runs exactly once — the salted subtree never touches them)
+              hotBands.add(band)
               metrics.foreach { m => m.hotBuckets.add(1); m.hotPostings.add(ids0.length) }
               Iterator.empty
             } else {
@@ -224,35 +197,73 @@ object CandidatePairs {
       .agg(count(lit(1)).cast("int").as("small_bands"))
       .localCheckpoint(eager = true)
     spark.sparkContext.setJobDescription(outerDesc)
+    (smallAgg, hotBands.value.asScala.toSet)
+  }
+
+  /** The distinct (band, conv_id) postings of `bands` — the hot pass selects
+    * the bands the small scan recorded rather than re-classifying runs, so
+    * a band skipped there is always enumerated here, even when `sigs` is
+    * recomputed differently. Materialized once: it feeds the counts
+    * aggregation and both block-join replicas.
+    */
+  private[graft] def hotPostings(sigs: DataFrame, bands: Set[Long]): DataFrame = {
+    val sc = sigs.sparkSession.sparkContext
+    val outerDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("candidates:hot")
+    val hot = sigs
+      .select(explode(col("bands")).as("band"), col("conv_id"))
+      .filter(col("band").isInCollection(bands))
+      .distinct()
+      .localCheckpoint(eager = true)
+    sc.setJobDescription(outerDesc)
+    hot
+  }
+
+  /** All unordered candidate pairs (id_a < id_b) with the number of
+    * matching bands. Complete (no recall loss from capping).
+    *
+    * Shape (common, no-hot-band case — ONE fused pass, nothing
+    * materialized but the aggregated candidates): the posting rows take
+    * one hash exchange, a Tungsten sort by band, and a streaming run scan
+    * that enumerates each small (≤ bucketCap) bucket STRAIGHT INTO the
+    * hit-count aggregation's map-side partials. The eager materialization
+    * of the aggregated output (bounded by candidate density — orders of
+    * magnitude below the raw pair stream) doubles as the hot-band probe:
+    * the scan records the band of each oversized run in an accumulator,
+    * and only when that set is non-empty does the salted block-join
+    * subtree get built at all, over those bands' postings selected from
+    * the source (a second explode + filter + distinct, paid ONLY on hot
+    * corpora). Earlier shapes either checkpointed the full enumerated pair
+    * stream (quadratic in bucket sizes — 2.5M rows vs 114k postings on the
+    * events corpus, the dominant cost of the stage) or checkpointed the
+    * postings and re-scanned them per consumer (~20 s of the narrow-width
+    * 600k-conv candidate phase); this shape stores neither.
+    *
+    * No counts aggregation, no count join, no band self-join (the round-4
+    * join shape re-read the postings exchange up to 4x and probed a
+    * bucket-count hash relation per read). The scan buffers at most one
+    * run AND at most bucketCap+1 rows — memory is O(bucketCap) regardless
+    * of how hot a band is.
+    */
+  def candidatePairs(sigs: DataFrame, cfg: DedupConfig,
+                     metrics: Option[CandidateMetrics] = None): DataFrame = {
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    val cap = cfg.bucketCap
+    val (smallAgg, hotBands) = smallScan(sigs, cfg, metrics)
 
     // ---- hot short-circuit: zero oversized runs (the usual case after
     //      exact-dup collapse) means the aggregated counts are already
     //      complete — return without building the ~5-stage salted subtree ----
-    if (hotRunGate.value == 0L) {
+    if (hotBands.isEmpty) {
       return smallAgg
         .select(col("id_a"), col("id_b"), col("small_bands").as("matching_bands"))
         .filter(col("matching_bands") >= cfg.minBands)
     }
 
-    // ---- oversized buckets (rare branch): salted block decomposition.
-    //      The hot postings are re-derived from the source — a second
-    //      explode+sort pass paid only on corpora that actually have hot
-    //      bands. distinct mirrors the pair pass's per-bucket id dedupe;
-    //      materialized once because it feeds the counts aggregation and
-    //      both block-join replicas. ----
-    spark.sparkContext.setJobDescription("candidates:hot")
-    val hot = postings
-      .mapPartitions { iter =>
-        new RunScan[(Long, String)](iter, cap,
-          emit = (band, ids, overflowed) =>
-            if (!overflowed) Iterator.empty
-            else ids.iterator.map(id => (band, id)),
-          emitTail = (band, id) => Iterator.single((band, id)))
-      }
-      .toDF("band", "conv_id")
-      .distinct()
-      .localCheckpoint(eager = true)
-    spark.sparkContext.setJobDescription(outerDesc)
+    // ---- oversized buckets (rare branch): salted block decomposition over
+    //      the postings of exactly the bands the scan skipped ----
+    val hot = hotPostings(sigs, hotBands)
     val hotCounts = hot.groupBy(col("band")).agg(count(lit(1)).as("n"))
     val big = hot.join(broadcast(hotCounts), Seq("band"))
       .withColumn("g", ceil(col("n") / cap).cast("int"))

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * construction; recall is the LSH operating point, pinned by test).
   *
   * Scale shape (100 TB): the bands exchange carries (id, band) only; the
-  * verify joins re-attach the embedding payload per side keyed by id, so
-  * payload bytes move in proportion to candidate density, never corpus².
+  * verify scan reads the embeddings in place and broadcasts only the
+  * candidate members' (chunked above the byte gate), never corpus².
   */
 object EmbeddingDedup {
 
@@ -43,15 +43,10 @@ object EmbeddingDedup {
     * suffices for candidacy (recall-first; the exact re-score makes the
     * threshold decision).
     *
-    * Verify shape (same discipline as the MinHash `VerifyPairs` path —
-    * ONE payload-carrying exchange): the corpus is reduced to candidate
-    * members via a broadcast-distinct-id semi-join (no payload moves, the
-    * id set is ~8 B/row), join 1 streams the member embeddings against
-    * the BROADCAST pair list (no exchange), and join 2 — the only
-    * embedding-carrying exchange — meets the join-1 output and the member
-    * payload in a shuffled hash join on id_b. Without the explicit hints,
-    * checkpoint-derived size estimates would shuffle the FULL corpus
-    * embedding column on vec_id.
+    * Verify shape: one [[ProbeScan.pairScores]] scan of `emb` — the
+    * candidate list and its `id_b` members' embeddings broadcast behind the
+    * byte gate, only `id_a` members deserialized, exact cosine inline. No
+    * embedding is exchanged.
     */
   def dupPairs(spark: SparkSession, emb: DataFrame, theta: Double,
                numTables: Int = 16, rowsPerBand: Int = 8, seed: Long = 0L,
@@ -71,22 +66,16 @@ object EmbeddingDedup {
       .select(lpad(col("vec_id").cast("string"), 19, "0").as("conv_id"), col("bands"))
     val cfg = DedupConfig(numTables = numTables, rowsPerBand = rowsPerBand,
       seed = seed, minBands = 1, bucketCap = bucketCap)
+    import spark.implicits._
     val cand = CandidatePairs.candidatePairs(sigs, cfg)
-      .select(col("id_a").cast("long").as("id_a"), col("id_b").cast("long").as("id_b"))
-      .localCheckpoint(true)
-    val ids = cand.select(col("id_a").as("vec_id"))
-      .unionByName(cand.select(col("id_b").as("vec_id")))
-    val members = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .join(broadcast(ids.distinct()), Seq("vec_id"), "left_semi")
-      .localCheckpoint(true)
-    val memberA = members.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val memberB = members.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    memberA.join(broadcast(cand), Seq("id_a"))
-      .hint("shuffle_hash")
-      .join(memberB, Seq("id_b"))
-      .withColumn("cosine", Knn.cosineCol("emb_a", "emb_b"))
-      .filter(col("cosine") >= theta)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+      .select(col("id_a").cast("long"), col("id_b").cast("long"), lit(0L))
+    ProbeScan.pairScores(cand.as[(Long, Long, Long)],
+        emb.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])],
+        (e: Array[Float]) => 4L * Option(e).fold(0)(_.length)) { (a, b, _, ea, eb) =>
+      val c = Knn.cosine(ea, eb)
+      // Spark SQL orders NaN above every double, so `cosine >= theta` keeps a NaN
+      if (c != null && !(c < theta)) Some((a, b, c)) else None
+    }.toDF("id_a", "id_b", "cosine")
   }
 
   /** Every vector labeled with its near-dup cluster (min member id), via

@@ -2,27 +2,30 @@ package graft.operators
 
 import graft.kernels.ExactSim
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
-/** The probe-vs-index band join — ≙ the reference's read path, where one
+/** Broadcast-then-narrow scans — ≙ the reference's read path, where one
   * query's hashes meet the postings in a single pass that counts hits per
   * doc and exact-scores only the hits (`MatchHashesAndScoreQuery` +
-  * `HitCounter`, SURVEY C2/C5).
+  * `HitCounter`, SURVEY C2/C5). A small side is collected into a broadcast
+  * table and the large side is read in ONE narrow `mapPartitions` pass that
+  * scores inline: only scored rows leave it and it is never exchanged. Over
+  * the byte gate [[BroadcastBudget]] the table is cut in its stable row
+  * order into chunks, one broadcast and scan each, unioned — row for row
+  * the one-chunk result, since every table row is matched on its own.
   *
-  * The probe is collected into a broadcast band table (band → probe rows,
-  * one entry per occurrence, so a repeated band value counts probe
-  * occurrences × index occurrences, as a posting join does) plus its
-  * payload. The index is read in ONE narrow `mapPartitions` pass that counts
-  * band hits per probe row and scores each hit inline: only scored hits
-  * leave it, the index is never exchanged, and a hot index band has no join
-  * key to pile up on. Over the byte gate [[BroadcastBudget]] the probe is
-  * cut in its stable row order into chunks, each with its own broadcast and
-  * index scan, unioned — row for row the one-chunk result, since every probe
-  * row is matched on its own. Probe and index ids are unique keys.
+  * Probe vs index ([[textPairs]], [[knnScored]]): the table maps band →
+  * probe rows, one entry per occurrence (a repeated band value counts probe
+  * × index occurrences, as a posting join does); a hot index band has no
+  * join key to pile up on. Probe and index ids are unique keys. Candidate
+  * pairs vs their payload: [[pairScores]].
   */
 object ProbeScan {
 
@@ -32,15 +35,19 @@ object ProbeScan {
   private def len(a: Array[_]): Int = if (a == null) 0 else a.length
 
   /** The rows of `rdd` in stable row order (partition, then position), in
-    * chunks of at most [[BroadcastBudget]] measured bytes plus one row. One
-    * job when every partition fits its 1/n share of the budget. Otherwise
-    * that job's per-partition byte totals place every row in a chunk; each
-    * chunk is one more job over the partitions it spans, failing loudly if
-    * a partition no longer measures what the first job measured.
+    * chunks of at most `budget` measured bytes plus one row. No job without
+    * partitions, one when every partition fits its 1/n share of the budget.
+    * Otherwise that job's per-partition byte totals place every row in a
+    * chunk; each chunk is one more job over the partitions it spans, read
+    * from one cached copy (so a partition split between two chunks is cut in
+    * the same row order both times), failing loudly if a partition no longer
+    * measures what the first job measured.
     */
-  private[graft] def chunks[T: ClassTag](rdd: RDD[T], bytesOf: T => Long): Iterator[Array[T]] = {
+  private[graft] def chunks[T: ClassTag](rdd: RDD[T], bytesOf: T => Long,
+                                         budget: Long = BroadcastBudget): Iterator[Array[T]] = {
     val sc = rdd.sparkContext
-    val share = BroadcastBudget / math.max(1, rdd.getNumPartitions)
+    val share = budget / math.max(1, rdd.getNumPartitions)
+    if (rdd.getNumPartitions == 0) return Iterator(Array.empty[T])
     val first = rdd.mapPartitions { it =>
       val buf = mutable.ArrayBuilder.make[T]
       var bytes = 0L
@@ -49,22 +56,32 @@ object ProbeScan {
     }.collect()
     if (first.forall(_._2 != null)) Iterator(first.flatMap(_._2))
     else {
+      val cache = rdd.getStorageLevel == StorageLevel.NONE
+      if (cache) rdd.persist(StorageLevel.MEMORY_AND_DISK)
       val starts = first.map(_._1).scanLeft(0L)(_ + _)
-      Iterator.range(0, ((starts.last + BroadcastBudget - 1) / BroadcastBudget).toInt).map { c =>
-        val (lo, hi) = (c * BroadcastBudget, (c + 1) * BroadcastBudget)
+      val n = ((starts.last + budget - 1) / budget).toInt
+      Iterator.range(0, n).map { c =>
+        val (lo, hi) = (c * budget, (c + 1) * budget)
         val parts = first.indices.filter(p => starts(p) < hi && starts(p + 1) > lo)
-        parts.zip(sc.runJob(rdd, (ctx: TaskContext, it: Iterator[T]) => {
+        val rows = parts.zip(sc.runJob(rdd, (ctx: TaskContext, it: Iterator[T]) => {
           var at = starts(ctx.partitionId())
           val kept = it.filter { t => val in = at >= lo && at < hi; at += bytesOf(t); in }.toArray
           (at, kept)
         }, parts)).flatMap { case (p, (end, kept)) =>
           require(end == starts(p + 1),
-            "the probe's rows changed between passes: materialize a nondeterministic probe before the scan")
+            "the scanned table's rows changed between passes: materialize a nondeterministic input before the scan")
           kept
         }.toArray
+        if (cache && c == n - 1) rdd.unpersist(blocking = false)
+        rows
       }
     }
   }
+
+  /** The union of `scanOne` over one broadcast per table (empty: no table). */
+  private def unionOf[T: ClassTag, O: Encoder](tables: Iterator[T], sc: org.apache.spark.SparkContext)(
+      scanOne: Broadcast[T] => Dataset[O]): Option[Dataset[O]] =
+    tables.map(sc.broadcast(_)).toList.map(scanOne).reduceOption(_ union _)
 
   /** One chunk's band table: probe ids, payloads, band → probe rows. */
   private final class Table[I, P](val ids: Array[I], val payload: Array[P], bands: Array[Array[Long]])
@@ -84,8 +101,7 @@ object ProbeScan {
   private def scan[I, P, R, O: Encoder](tables: Iterator[Table[I, P]], index: Dataset[R],
                                         bandsOf: () => R => Array[Long],
                                         score: (Table[I, P], Int, Int, R) => Option[O]): Dataset[O] = {
-    val sc = index.sparkSession.sparkContext
-    tables.map(sc.broadcast(_)).toList.map { bc =>
+    unionOf(tables, index.sparkSession.sparkContext) { bc =>
       index.mapPartitions { it =>
         val t = bc.value
         val counts = new Array[Int](t.ids.length)
@@ -109,7 +125,7 @@ object ProbeScan {
           }
         }
       }
-    }.reduce(_ union _)
+    }.get
   }
 
   private type IndexRow = (String, Array[Long], Array[Long], Long)
@@ -178,5 +194,75 @@ object ProbeScan {
       (t: Table[Long, Array[Float]], p: Int, _: Int, r: VecRow) =>
         if (t.ids(p) == r._1) None else Some((t.ids(p), r._1, sim(t.payload(p), r._2))))
       .toDF("q_id", "n_id", "sim")
+  }
+
+  /** One chunk's pair table: the `id_b` members' payload rows, and per `id_a`
+    * its partners (b row, carried long), one per pair occurrence × b row
+    * occurrence — the multiplicity of the two equi-joins it stands for.
+    */
+  private final class PairTable[K, P](val ids: Array[K], val payload: Array[P],
+                                      val partners: Map[K, Array[(Int, Long)]]) extends Serializable
+
+  private def pairTable[K: ClassTag, P: ClassTag](pairs: Array[(K, K, Long)], members: Array[(K, P)]) = {
+    val rowsOf = members.indices.groupBy(r => members(r)._1)
+    new PairTable(members.map(_._1), members.map(_._2),
+      (for ((a, b, c) <- pairs if a != null; r <- rowsOf.getOrElse(b, Nil)) yield (a, (r, c))).groupMap(_._1)(_._2))
+  }
+
+  /** What the last [[pairScores]] call (on any thread) collected: its tables
+    * and their measured pair and member-payload bytes. Diagnostics only.
+    */
+  private[graft] final case class PairScanStats(tables: Int, pairBytes: Long, payloadBytes: Long)
+  @volatile private[graft] var lastPairScan: PairScanStats = PairScanStats(0, 0L, 0L)
+
+  /** Candidate pairs exactly scored against their members' payload — ≙ the
+    * reference's re-score in the pass that reads the stored payload
+    * (SURVEY C5).
+    *
+    * The pairs, with the `id_b` members' payload, are collected into a
+    * broadcast table; `payload` is then read in ONE narrow pass that
+    * deserializes only `id_a` members (a broadcast semi-filter on its first
+    * column) and scores each against its partners inline. Nothing is
+    * exchanged. Multiplicity is the two equi-joins' (payload rows of `id_a`
+    * × pair rows × payload rows of `id_b`); a null id matches nothing.
+    * The pairs are cut at half the budget and, per pair chunk, the members'
+    * payload at the rest, as [[chunks]] does: one table and one scan each,
+    * unioned. An empty pair set runs no payload job.
+    *
+    * @param pairs        (id_a, id_b, a long carried to `score`)
+    * @param payload      (id, payload)
+    * @param payloadBytes measured bytes of one payload value
+    * @param score        (id_a, id_b, carried, a's payload, b's payload) → the row, or None
+    */
+  private[graft] def pairScores[K: ClassTag: TypeTag, P: ClassTag, O: Encoder](
+      pairs: Dataset[(K, K, Long)], payload: Dataset[(K, P)], payloadBytes: P => Long)(
+      score: (K, K, Long, P, P) => Option[O]): Dataset[O] = {
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
+    def idBytes(k: K): Long = k match { case s: String => 2L * s.length; case _ => 8L }
+    def rowsIn[S](bc: Broadcast[S])(has: (S, K) => Boolean): Dataset[(K, P)] =
+      payload.filter(udf((k: K) => k != null && has(bc.value, k)).apply(payload.col(payload.columns.head)))
+    val pairBytes = (p: (K, K, Long)) => 24L + idBytes(p._1) + idBytes(p._2)
+    val memberBytes = (m: (K, P)) => 16L + idBytes(m._1) + payloadBytes(m._2)
+    var stats = PairScanStats(0, 0L, 0L)
+    val tables = chunks(pairs.rdd, pairBytes, BroadcastBudget / 2).filter(_.nonEmpty).flatMap { ps =>
+      val pb = ps.iterator.map(pairBytes).sum
+      stats = stats.copy(pairBytes = stats.pairBytes + pb)
+      val bs = sc.broadcast(ps.iterator.map(_._2).toSet)
+      chunks(rowsIn(bs)(_ contains _).rdd, memberBytes, BroadcastBudget - pb).map { ms =>
+        stats = stats.copy(tables = stats.tables + 1, payloadBytes = stats.payloadBytes + ms.iterator.map(memberBytes).sum)
+        pairTable(ps, ms)
+      }
+    }.filter(_.partners.nonEmpty)
+    val out = unionOf(tables, sc) { bc =>
+      rowsIn(bc)(_.partners contains _).mapPartitions { it =>
+        val t = bc.value
+        it.flatMap { case (a, pa) =>
+          t.partners(a).iterator.flatMap { case (r, c) => score(a, t.ids(r), c, pa, t.payload(r)) }
+        }
+      }
+    }.getOrElse(spark.emptyDataset[O])
+    lastPairScan = stats
+    out
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.DedupConfig
-import graft.kernels.SimHashModel
+import graft.kernels.{ExactSim, SimHashModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,47 +39,26 @@ object SimHashPairs {
   }
 
   /** Verified near-dup pairs: candidates exact-rescored with 64-bit Hamming
-    * similarity (codegen'd popcount — E3) and filtered at `minSim`.
+    * similarity ([[ExactSim.hammingSim64]]) and filtered at `minSim`, in one
+    * [[ProbeScan.pairScores]] scan of the fingerprints: the candidate list
+    * and its `id_b` members' fingerprints are broadcast behind the byte
+    * gate (chunked above it — a dup-dense corpus makes the candidate set
+    * quadratic in its identical-fingerprint cliques), and no fingerprint is
+    * exchanged.
     *
     * @return (id_a, id_b, simhash_sim)
     */
-  /** @param broadcastPairs broadcastable-candidate regime (the default,
-    *        same assumption as `DedupConfig.broadcastVerifyIds`): candidate
-    *        ids and the pair list are broadcast so only member fingerprints
-    *        ever shuffle. Disable at extreme dup densities — every join
-    *        falls back to shuffled-hash with no corpus-side broadcast.
-    */
-  def dupPairs(fps: DataFrame, numBands: Int, minSim: Double, bucketCap: Int,
-               broadcastPairs: Boolean = true): DataFrame = {
-    // Same verify-join discipline as VerifyPairs: candidates are
-    // materialized once (tiny — tens of bytes/row), the corpus fingerprint
-    // table is reduced to candidate MEMBERS via a broadcast-distinct-id
-    // semi-join before any of it moves, and the two scoring joins then
-    // stream the member fingerprints against the BROADCAST pair list / a
-    // shuffled-hash join bounded by candidate density. The previous shape
-    // shuffled the FULL corpus fingerprint table through both joins — 16
-    // B/row, but corpus-sized exchanges where member-bounded ones suffice.
+  def dupPairs(fps: DataFrame, numBands: Int, minSim: Double, bucketCap: Int): DataFrame = {
+    val spark = fps.sparkSession
+    import spark.implicits._
+    // materialized once: it feeds the candidate scan and the scoring scan
     val fpsM = fps.select(col("conv_id"), col("simhash")).localCheckpoint(eager = true)
-    val cand = candidates(fpsM, numBands, bucketCap).localCheckpoint(eager = true)
-    val ids = cand.select(col("id_a").as("conv_id"))
-      .unionByName(cand.select(col("id_b").as("conv_id")))
-    val idsSide = if (broadcastPairs) broadcast(ids.distinct()) else ids
-    val members = fpsM.join(idsSide, Seq("conv_id"), "left_semi")
-      .localCheckpoint(eager = true)
-    val hammingSim = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      (lit(64) - bit_count(a.bitwiseXOR(b))).cast("double") / 64.0
-    val join1 =
-      if (broadcastPairs)
-        members.select(col("conv_id").as("id_a"), col("simhash").as("fp_a"))
-          .join(broadcast(cand), Seq("id_a"))
-      else
-        members.select(col("conv_id").as("id_a"), col("simhash").as("fp_a"))
-          .join(cand.hint("shuffle_hash"), Seq("id_a"))
-    join1.hint("shuffle_hash")
-      .join(members.select(col("conv_id").as("id_b"), col("simhash").as("fp_b")), Seq("id_b"))
-      .withColumn("simhash_sim", hammingSim(col("fp_a"), col("fp_b")))
-      .filter(col("simhash_sim") >= minSim)
-      .select(col("id_a"), col("id_b"), col("simhash_sim"))
+    ProbeScan.pairScores(
+        candidates(fpsM, numBands, bucketCap).select(col("id_a"), col("id_b"), lit(0L)).as[(String, String, Long)],
+        fpsM.as[(String, Long)], (_: Long) => 8L) { (a, b, _, fa, fb) =>
+      val sim = ExactSim.hammingSim64(fa, fb)
+      if (sim >= minSim) Some((a, b, sim)) else None
+    }.toDF("id_a", "id_b", "simhash_sim")
   }
 
   /** Every document labeled with its SimHash near-dup cluster (min member

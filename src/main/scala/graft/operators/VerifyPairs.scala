@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.DedupConfig
 import graft.kernels.{ExactSim, Lcs}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact re-scoring of candidate pairs — ≙ the reference's C5
@@ -10,109 +10,36 @@ import org.apache.spark.sql.functions._
   * `HashingQuery.scala:23-38` exact-function closure): decode the stored
   * payload, apply the exact similarity, keep survivors.
   *
-  * In batch form: join the candidate pairs back to the signatures table
-  * (which still carries the shingle sets — the ≙binary-doc-value payload)
-  * on each side, apply the exact Jaccard kernel, filter at θ. Precision of
+  * In batch form: the candidate pairs meet the signatures table (which
+  * still carries the shingle sets — the ≙binary-doc-value payload) in one
+  * narrow [[ProbeScan.pairScores]] pass that applies the exact Jaccard
+  * kernel and filters at θ; no shingle array is exchanged. Precision of
   * the final pair set is 1.0 by construction (every emitted pair is exactly
   * verified); recall is owned by the banding config upstream.
   */
 object VerifyPairs {
 
-  /** Exact Jaccard over SORTED-DISTINCT shingle arrays (every producer —
-    * [[graft.kernels.Shingler]] — sorts and dedupes on write, exactly so
-    * downstream intersections are linear merges). This is
-    * [[ExactSim.jaccard]]'s allocation-free two-pointer merge as a UDF
-    * (nulls → empty; empty∩empty = 1 by contract). The previous codegen'd
-    * `size(array_intersect(a, b))` built the intersection ARRAY (a hash
-    * set probe plus an output allocation per pair) just to take its
-    * length — measured 6–7× slower than the merge on the verified-dup
-    * shape (tools/JaccBench, 200 k pairs of ~300-element sets,
-    * mismatches = 0). The round-4 measurement that favored the built-in
-    * (39 s → 2 s) predates the member-reduced join shape; re-measured on
-    * today's shape the kernel wins decisively, and the scored values are
-    * identical either way.
+  private type Payload = (Array[Long], java.lang.Long)
+
+  /** The shared exact scoring: one [[ProbeScan.pairScores]] scan of `sigs`
+    * (the pairs and their `id_b` members' payload broadcast, only `id_a`
+    * members deserialized, no exchange) with [[ExactSim.jaccard]] (null
+    * shingles → empty) and [[ExactSim.hammingSim64]] (null simhash → null),
+    * keeping pairs with jaccard ≥ `theta`. `matching_bands` keeps its type.
     */
-  private val jaccardUdf = udf { (a: Array[Long], b: Array[Long]) =>
-    ExactSim.jaccard(
-      if (a == null) Array.empty[Long] else a,
-      if (b == null) Array.empty[Long] else b)
-  }
-
-  private[graft] def jaccardColumn(a: Column, b: Column): Column = jaccardUdf(a, b)
-
-  /** ≙ [[ExactSim.hammingSim64]], codegen'd: (64 − popcount(a⊕b))/64. */
-  private def hamming64Col(a: Column, b: Column): Column =
-    (lit(64) - bit_count(a.bitwiseXOR(b))).cast("double") / 64.0
-
-  /** Payload reduced to candidate members before the array-carrying joins:
-    * the id set moves at ~16 bytes/row where the shingle payload is ~KB/row,
-    * so pre-filtering cuts the heavy exchanges by the candidate density
-    * (dup pairs are sparse relative to the corpus in every real pipeline).
-    */
-  private def memberPayload(pairs: DataFrame, sigs: DataFrame, broadcastIds: Boolean): DataFrame = {
-    val ids = pairs.select(col("id_a").as("conv_id"))
-      .unionByName(pairs.select(col("id_b").as("conv_id")))
-    // The broadcast hint must be explicit: checkpointed inputs give the
-    // planner no usable size estimate, and AQE's runtime conversion comes
-    // too late — both semi-join sides launch in parallel, so the payload
-    // exchange runs to completion before AQE sees the id set is tiny.
-    // The broadcast side MUST be distinct: Spark's broadcast HashedRelation
-    // retains duplicate rows (the semi-join probe only checks keys, but the
-    // collected and per-executor-shipped relation still holds 2×|pairs|
-    // rows), so at high candidate multiplicity an un-deduped id list
-    // inflates the driver collect and every executor's broadcast copy. The
-    // distinct is a small shuffle of ~16 B id rows — bounded by |distinct
-    // members|, not |pairs|. The non-broadcast path (disable via
-    // cfg.broadcastVerifyIds at extreme dup densities) needs no distinct:
-    // the shuffled semi-join dedups inside its build hash table.
-    val idsSide = if (broadcastIds) broadcast(ids.distinct()) else ids
-    sigs.select(col("conv_id"), col("shingles"), col("simhash"))
-      .join(idsSide, Seq("conv_id"), "left_semi")
-  }
-
-  /** The shared exact-scoring join. Shape (broadcastable regime,
-    * `broadcastPairs = true`):
-    *
-    *   - pairs are materialized once (they feed three subtrees) and are
-    *     tiny — tens of bytes/row vs the KB-sized shingle payload;
-    *   - the member-reduced payload is materialized once (it feeds both
-    *     join sides);
-    *   - join 1 streams the payload against the BROADCAST pairs — neither
-    *     side shuffles, and the shingle arrays stay where they are;
-    *   - join 2 is the only payload exchange: the join-1 output (one row
-    *     per pair, now carrying sh_a) and the payload meet in a shuffled
-    *     hash join on id_b.
-    *
-    * That is one array-carrying exchange per verify instead of three. In
-    * the candidate-dense regime (`broadcastPairs = false`, same knob as
-    * the id semi-join) both joins fall back to shuffled hash joins — the
-    * hint must still be explicit: Catalyst's size estimate for a
-    * checkpointed plan badly undercounts array columns, and without it
-    * the ENTIRE signatures table gets broadcast (driver-serial collect,
-    * OOM-by-maxResultSize at scale).
-    */
-  private def scoredPairs(pairs: DataFrame, sigs: DataFrame, broadcastPairs: Boolean): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    val outerDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("verify:pairs")
-    val pairsM = pairs.localCheckpoint(true)
-    sc.setJobDescription("verify:payload")
-    val payload = memberPayload(pairsM, sigs, broadcastPairs).localCheckpoint(true)
-    sc.setJobDescription(outerDesc)
-    val payloadA = payload.withColumnRenamed("conv_id", "id_a")
-      .withColumnRenamed("shingles", "sh_a")
-      .withColumnRenamed("simhash", "fp_a")
-    val payloadB = payload.withColumnRenamed("conv_id", "id_b")
-      .withColumnRenamed("shingles", "sh_b")
-      .withColumnRenamed("simhash", "fp_b")
-    val join1 =
-      if (broadcastPairs) payloadA.join(broadcast(pairsM), Seq("id_a"))
-      else payloadA.join(pairsM.hint("shuffle_hash"), Seq("id_a"))
-    join1.hint("shuffle_hash")
-      .join(payloadB, Seq("id_b"))
-      .withColumn("jaccard", jaccardColumn(col("sh_a"), col("sh_b")))
-      .withColumn("simhash_sim", hamming64Col(col("fp_a"), col("fp_b")))
-      .select("id_a", "id_b", "matching_bands", "jaccard", "simhash_sim")
+  private def scoredPairs(pairs: DataFrame, sigs: DataFrame, theta: Double): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val none = Array.emptyLongArray
+    ProbeScan.pairScores(
+        pairs.select(col("id_a"), col("id_b"), col("matching_bands").cast("long")).as[(String, String, Long)],
+        sigs.select(col("conv_id"), struct(col("shingles"), col("simhash"))).as[(String, Payload)],
+        (p: Payload) => 8L + 8L * Option(p._1).fold(0)(_.length)) { (a, b, bands, pa, pb) =>
+      val j = ExactSim.jaccard(Option(pa._1).getOrElse(none), Option(pb._1).getOrElse(none))
+      val sim: java.lang.Double = if (pa._2 == null || pb._2 == null) null else ExactSim.hammingSim64(pa._2, pb._2)
+      if (j >= theta) Some((a, b, bands, j, sim)) else None
+    }.toDF("id_a", "id_b", "matching_bands", "jaccard", "simhash_sim")
+      .withColumn("matching_bands", col("matching_bands").cast(pairs.schema("matching_bands").dataType))
   }
 
   /** @param pairs (id_a, id_b, matching_bands)
@@ -120,15 +47,14 @@ object VerifyPairs {
     * @return (id_a, id_b, matching_bands, jaccard, simhash_sim) filtered at θ
     */
   def verify(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    scoredPairs(pairs, sigs, cfg.broadcastVerifyIds)
-      .filter(col("jaccard") >= cfg.theta)
+    scoredPairs(pairs, sigs, cfg.theta)
 
   /** Exact verification without the θ filter — exposes the raw scores for
     * diagnostics and threshold tuning (≙ the reference's function-score
     * variant Q5: score without filtering).
     */
-  def score(pairs: DataFrame, sigs: DataFrame, broadcastIds: Boolean = true): DataFrame =
-    scoredPairs(pairs, sigs, broadcastIds)
+  def score(pairs: DataFrame, sigs: DataFrame): DataFrame =
+    scoredPairs(pairs, sigs, Double.NegativeInfinity)
 
   private val lcsRatioUdf = udf { (a: String, b: String) =>
     Lcs.lcsRatio(if (a == null) "" else a, if (b == null) "" else b)

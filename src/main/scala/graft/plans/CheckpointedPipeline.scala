@@ -241,7 +241,7 @@ object CheckpointedPipeline {
       extraLineage = () =>
         s""","hot_buckets":${candMetrics.hotBuckets.value},"hot_postings":${candMetrics.hotPostings.value},"salted_pairs":${candMetrics.saltedPairs.value}""") {
       // bands-only rep aggregation (same shape as Dedup.pipeline): the
-      // shingle payload joins in member-reduced inside verify
+      // shingle payload is read in place by verify's pair scan
       val repBands = groups.select(col("rep").as("conv_id"), col("bands"))
       Dedup.verify(Dedup.candidates(repBands, cfg, Some(candMetrics)), sigs, cfg)
     }
@@ -404,7 +404,7 @@ object CheckpointedPipeline {
     val candMetrics = graft.operators.CandidatePairs.CandidateMetrics.register(spark)
     // The new×new and new×old candidate families are independent until the
     // edge union, and each is a serial chain of eager materializations
-    // (candidate scan, verify pair/payload checkpoints) — run them as two
+    // (candidate scan, verify's pair and member collects) — run them as two
     // concurrent driver threads so one branch's job tail back-fills the
     // other's idle width (guide §2.6); each branch ends in an eager
     // localCheckpoint so its work really happens inside its thread. Spark

@@ -47,7 +47,11 @@ object JaccBench {
     }.toDF("sh_a", "sh_b").localCheckpoint(true)
     println(s"[jaccbench] pairs=${pairs.count()}")
 
-    def hofCol = graft.operators.VerifyPairs.jaccardColumn(col("sh_a"), col("sh_b"))
+    def hofCol = {
+      val isec = size(array_intersect(col("sh_a"), col("sh_b")))
+      val un = size(col("sh_a")) + size(col("sh_b")) - isec
+      when(un === 0, lit(1.0)).otherwise(isec.cast("double") / un)
+    }
     noop(pairs.withColumn("j", hofCol))
     noop(pairs.withColumn("j", jaccardUdf(col("sh_a"), col("sh_b"))))
     for (rep <- 1 to 3) {

@@ -1,35 +1,34 @@
 package graft.tools
 
 import graft.{Dedup, DedupConfig}
-import org.apache.spark.sql.SparkSession
+import graft.operators.ProbeScan
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicLong
 
-/** Dev probe: bisect the candidates→verify chain of the checkpointed
-  * pipeline's pairs stage on the events-derived corpus. Not part of the
-  * engine. Usage: sbt "runMain graft.tools.VerProbe [sfDir]"
+/** Dev probe: the verify phase of the pipeline on a materialized candidate
+  * set — wall and executor CPU time, shuffle bytes written, and the pair
+  * scan's table count (one `sigs` scan each) with its collected pair and
+  * member-payload bytes. Not part of the engine.
+  *
+  * Usage: sbt "runMain graft.tools.VerProbe <sfDir | gen:N> [rounds]" —
+  * `sfDir` takes the events-derived corpus (each user's events as a
+  * conversation plus a near-copy), `gen:N` the N-conversation TranscriptGen
+  * corpus the scaling bench runs.
   */
 object VerProbe {
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  /** Executor CPU and shuffle bytes written by the tasks that end while it listens. */
+  private final class TaskTotals extends SparkListener {
+    val cpuNs, shuffleBytes = new AtomicLong
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (t.taskMetrics != null) {
+      cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
+      shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val scratch = if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm/graft-verprobe" else "/tmp/graft-verprobe"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"$scratch/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Dedup.pipeline(spark, graft.sources.TranscriptGen.df(spark, 5000L), DedupConfig()).count()
-
+  private def eventsCorpus(spark: SparkSession, sfDir: String): DataFrame = {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     def conv(prefix: String) =
@@ -43,35 +42,48 @@ object VerProbe {
     val dup = base.filter(col("turn_idx") < col("n_ev"))
       .select(conv("d"), col("turn_idx"), lit("user").as("role"),
         col("event_type").as("text"), lit("").as("tool"), col("ts"))
-    val ts = orig.unionByName(dup)
-    val cfg = DedupConfig()
+    orig.unionByName(dup)
+  }
 
+  def main(args: Array[String]): Unit = {
+    val source = args.headOption.getOrElse(sys.error("usage: VerProbe <sfDir | gen:N> [rounds]"))
+    val rounds = if (args.length > 1) args(1).toInt else 3
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val scratch = if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
+      "/dev/shm/graft-verprobe" else "/tmp/graft-verprobe"
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.local.dir", s"$scratch/spark-local")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    Dedup.pipeline(spark, graft.sources.TranscriptGen.df(spark, 5000L), DedupConfig()).count()
+
+    val ts =
+      if (source.startsWith("gen:")) graft.sources.TranscriptGen.df(spark, source.stripPrefix("gen:").toLong).toDF()
+      else eventsCorpus(spark, source)
+    val cfg = DedupConfig()
     val sigs = Dedup.signatures(spark, Dedup.documents(ts), cfg).localCheckpoint(true)
     val groups = Dedup.repGroups(sigs).localCheckpoint(true)
     val repBands = groups.select(col("rep").as("conv_id"), col("bands")).localCheckpoint(true)
-    println(s"VERPROBE sigs=${sigs.count()} reps=${repBands.count()}")
+    val cand = Dedup.candidates(repBands, cfg).localCheckpoint(true)
+    println(s"VERPROBE source=$source cpus=$cpus sigs=${sigs.count()} reps=${repBands.count()} candidates=${cand.count()}")
 
-    println("VERPROBE bucket sizes (top):")
-    graft.operators.CandidatePairs.bucketMetrics(repBands).limit(12).collect()
-      .foreach(r => println(s"VERPROBE   bucket_size=${r.get(0)} n_buckets=${r.get(1)}"))
-    val m0 = graft.operators.CandidatePairs.CandidateMetrics.register(spark)
-    val cand = Dedup.candidates(repBands, cfg, Some(m0)).localCheckpoint(true)
-    println(s"VERPROBE candidate_rows=${cand.count()} hotBuckets=${m0.hotBuckets.value} hotPostings=${m0.hotPostings.value} saltedPairs=${m0.saltedPairs.value}")
-
-    (1 to 3).foreach { round =>
-      val tScan = time {
-        // candidates WITHOUT the trailing aggregation: the scan subtree only
-        val m = graft.operators.CandidatePairs.CandidateMetrics.register(spark)
-        Dedup.candidates(repBands, cfg, Some(m)).localCheckpoint(true): Unit
-      }
-      val tVerify = time {
-        val m = graft.operators.CandidatePairs.CandidateMetrics.register(spark)
-        Dedup.verify(Dedup.candidates(repBands, cfg, Some(m)), sigs, cfg).localCheckpoint(true): Unit
-      }
-      val tVerifyNoM = time {
-        Dedup.verify(Dedup.candidates(repBands, cfg, None), sigs, cfg).localCheckpoint(true): Unit
-      }
-      println(f"VERPROBE round=$round cand_ckpt=$tScan%.2f cand+verify=$tVerify%.2f cand+verify_noMetrics=$tVerifyNoM%.2f")
+    (1 to rounds).foreach { round =>
+      val totals = new TaskTotals
+      spark.sparkContext.addSparkListener(totals)
+      val t0 = System.nanoTime()
+      val verified = Dedup.verify(cand, sigs, cfg).localCheckpoint(true).count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(1000) // let the listener bus deliver the last task ends
+      spark.sparkContext.removeSparkListener(totals)
+      val scan = ProbeScan.lastPairScan
+      println(f"VERPROBE round=$round verified=$verified wall_s=$wall%.2f cpu_s=${totals.cpuNs.get / 1e9}%.2f " +
+        f"shuffle_write_bytes=${totals.shuffleBytes.get} " +
+        f"tables=${scan.tables} pair_bytes=${scan.pairBytes} payload_bytes=${scan.payloadBytes}")
     }
     spark.stop()
   }

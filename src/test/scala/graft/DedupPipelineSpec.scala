@@ -241,4 +241,20 @@ class DedupPipelineSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll
     withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size shouldBe 2 }
     comp.collect().map(_.getString(1)).toSet shouldBe Set("a00")
   }
+
+  test("a dropped observation: materialize recomputes the same count and width") {
+    val s = spark
+    import s.implicits._
+    val chain = (0 until 19).map(i => (f"a${i + 1}%02d", f"a$i%02d"))
+    val edges = (chain ++ Seq(("long" * 50, "x"))).toList.toDF("id_a", "id_b")
+    val (observed, observedJobs) = JobBudget(spark)(ConnectedComponents.materialize(edges))
+    graft.operators.Observed.dropAll = true
+    val (recomputed, jobs) =
+      try JobBudget(spark)(ConnectedComponents.materialize(edges))
+      finally graft.operators.Observed.dropAll = false
+    // the miss costs the aggregation job the observation replaced
+    jobs.size should be > observedJobs.size
+    (recomputed.count, recomputed.avgPairWidth) shouldBe ((observed.count, observed.avgPairWidth))
+    (recomputed.count, recomputed.avgPairWidth) shouldBe ((20L, (19 * 6 + 201).toDouble / 20))
+  }
 }

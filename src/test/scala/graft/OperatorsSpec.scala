@@ -52,6 +52,27 @@ class OperatorsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     sal shouldBe d // identical pairs AND identical matching-band counts
   }
 
+  test("the hot pass enumerates exactly the bands the small scan recorded") {
+    val s = spark
+    import s.implicits._
+    // band 1: 40 ids and band 2: 30 ids (hot at bucketCap 16); band 3: 5 ids (small)
+    val sigs = (0 until 40).map { i =>
+      (f"d$i%03d", Array(1L, 100L + i) ++ (if (i < 30) Array(2L) else Array.empty[Long]) ++
+        (if (i < 5) Array(3L) else Array.empty[Long]))
+    }.toDF("conv_id", "bands")
+    val m = CandidatePairs.CandidateMetrics.register(s)
+    val (_, recorded) = CandidatePairs.smallScan(sigs, DedupConfig(bucketCap = 16, minBands = 1), Some(m))
+    recorded shouldBe Set(1L, 2L)
+    m.hotBuckets.value shouldBe 2L
+    def bandsOf(hot: DataFrame) = hot.select("band").distinct().as[Long].collect().toSet
+    val hot = CandidatePairs.hotPostings(sigs, recorded)
+    bandsOf(hot) shouldBe recorded
+    hot.count() shouldBe 70L
+    // selection by the recorded set: a band is enumerated even where a
+    // re-scan of the postings would classify its run as small
+    bandsOf(CandidatePairs.hotPostings(sigs, Set(3L))) shouldBe Set(3L)
+  }
+
   test("duplicate ids in a bucket emit no self-pairs; non-ASCII ids orient by UTF-8 byte order") {
     val s = spark
     import s.implicits._
