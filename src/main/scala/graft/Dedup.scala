@@ -17,6 +17,12 @@ object Dedup {
     * n_chars) — the signature stage consumes only the first three, so the
     * first_ts/last_ts columns of the full [[Assembly.assemble]] contract
     * (and their per-row Timestamp materialization) are not paid for here.
+    *
+    * Calling it runs one narrow Spark job, the assembly's layout pass over
+    * the conv_id column, unless the input is streaming, nondeterministic or has an
+    * exchange of its own; when each conversation lies inside one input
+    * partition the documents are then assembled in place, with no exchange
+    * (see [[Assembly]]).
     */
   def documents(transcripts: DataFrame): DataFrame = Assembly.assembleDocs(transcripts)
 

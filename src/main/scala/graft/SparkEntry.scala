@@ -130,7 +130,7 @@ object SparkEntry {
         .select(col("conv_id"), col("cluster_id"), col("is_canonical").cast("long").as("is_canonical"))),
 
     // ---- S-path: assembly (ordered concat; oracle: string_agg). Same
-    //      sort-then-scan kernel shape as Assembly.assembleDocs: ONE hash
+    //      sort-then-scan kernel shape as Assembly's exchange path: ONE hash
     //      exchange on user_id + a Tungsten sort + a streaming concat pass.
     //      The previous groupBy + sort_array(collect_list(struct)) form
     //      paid ObjectHashAggregate object buffers plus an interpreted

@@ -2,9 +2,13 @@ package graft.plans
 
 import graft.{Dedup, DedupConfig}
 import graft.kernels.Hashing
-import graft.operators.{ConnectedComponents, Observed, ProbeScan}
+import graft.operators.{Assembly, ConnectedComponents, Observed, ProbeScan}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Frames
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 
@@ -25,6 +29,9 @@ import java.nio.file.{Files, Paths}
   *   clusters/     final (conv_id, cluster_id, is_canonical)
   * Each with `_lineage.json`: stage, config hash, upstream hash, row count,
   * wall seconds, bucket count — the per-partition lineage + metrics record.
+  * The signatures sidecar also records which assembly path built the
+  * documents (`assembly_path`: `in_place` or `exchange`) and its width
+  * (`assembly_partitions`), see [[graft.operators.Assembly.Assembled]].
   */
 object CheckpointedPipeline {
 
@@ -57,6 +64,12 @@ object CheckpointedPipeline {
     Files.writeString(lineagePath(dir), json)
   }
 
+  /** The signatures sidecar's record of which assembly path built the
+    * documents, and its width.
+    */
+  private def assemblyLineage(a: Assembly.Assembled): String =
+    s""","assembly_path":"${a.path}","assembly_partitions":${a.partitions}"""
+
   /** Row count of a just-written parquet checkpoint, answered from the file
     * FOOTERS instead of a data-scan Spark job: the lineage row counts are
     * bookkeeping taken right after each stage write (guide §1.4 — the count
@@ -71,15 +84,41 @@ object CheckpointedPipeline {
   /** Parquet data files under `dir` (recursive: partitionBy writes
     * subdirs), as qualified URIs — the form `Dataset.inputFiles` reports.
     */
-  private def parquetFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val it = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def parquetFiles(spark: SparkSession, dir: String): Seq[String] =
+    listing(spark, dir)._2.map(_.getPath.toUri.toString).toSeq
+
+  /** One recursive Hadoop listing of `dir` on the driver: its qualified
+    * root and the parquet data files Spark would read under it. Spark's
+    * hidden-path rule applies to every path component below the root: a
+    * name starting with `.`, or with `_` unless it is a `k=v` partition
+    * directory, or ending in `._COPYING_` is skipped (so `_temporary/`,
+    * `_SUCCESS` and checksum files are).
+    */
+  private def listing(spark: SparkSession, dir: String): (Path, Array[FileStatus]) = {
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = fs.makeQualified(path)
+    def visible(p: Path): Boolean = p == null || p == root || (!hidden(p.getName) && visible(p.getParent))
+    val it = fs.listFiles(root, true)
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
     while (it.hasNext) {
       val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f.getPath.toUri.toString
+      if (f.isFile && f.getPath.getName.endsWith(".parquet") && visible(f.getPath)) out += f
     }
-    out.toSeq
+    (root, out.toArray)
+  }
+
+  /** A file-status cache that answers the one root it was seeded for:
+    * Spark's file index takes the driver's listing as is and lists nothing
+    * itself (no parallel leaf-listing job over the `bucket=` directories).
+    */
+  private final class SeededListing(root: Path, files: Array[FileStatus]) extends FileStatusCache {
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      if (path == root) Some(files) else None
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = ()
   }
 
   private def withFooter[T](spark: SparkSession, file: String)(f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
@@ -94,15 +133,25 @@ object CheckpointedPipeline {
     files.map(f => withFooter(spark, f)(_.getRecordCount)).sum
 
   /** Read a checkpoint directory with its KNOWN schema: no schema-inference
-    * Spark job. A supplied schema would silently read a missing or renamed
-    * column as nulls, so the Spark schema recorded in one data file's footer
-    * is checked against it on the driver first — a column mismatch fails
-    * loudly (partition columns live in the directory names, not the files).
+    * Spark job, and no listing job — the directory is listed once on the
+    * driver ([[listing]]) and Spark's file index is built from that listing
+    * (the relation `spark.read.schema(schema).parquet(dir)` builds, without
+    * its listing; the session conf is untouched). A supplied schema would
+    * silently read a missing or renamed column as nulls, so the Spark
+    * schema recorded in one data file's footer is checked against it on the
+    * driver first — a column mismatch fails loudly (partition columns live
+    * in the directory names, not the files).
     */
   private def readKnown(spark: SparkSession, dir: String, schema: StructType,
                         partitionCols: Set[String] = Set.empty): DataFrame = {
-    val df = spark.read.schema(schema).parquet(dir)
-    df.inputFiles.headOption.foreach { file =>
+    val (root, files) = listing(spark, dir)
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema),
+      new SeededListing(root, files), None, None)
+    val partitionSchema = index.partitionSchema
+    val dataSchema = StructType(schema.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
+    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+      Frames.asNullable(dataSchema), None, new ParquetFileFormat, Map.empty)(spark))
+    files.headOption.map(_.getPath.toUri.toString).foreach { file =>
       def shape(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
       val recorded = withFooter(spark, file)(r => Option(
         r.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
@@ -213,7 +262,11 @@ object CheckpointedPipeline {
       }
     }
 
-    val sigs = stage("signatures", upstream = "transcripts", partitionCols = Seq("bucket")) {
+    // assembled only if the signatures stage is rebuilt; its sidecar records
+    // which assembly path ran
+    lazy val placed = Assembly.placedDocs(transcripts)
+    val sigs = stage("signatures", upstream = "transcripts", partitionCols = Seq("bucket"),
+        extraLineage = () => assemblyLineage(placed)) {
       // REBALANCE on the partition column before the partitionBy write
       // (guide §6): without it every write task opens one file per bucket
       // value it holds — tasks × nBuckets files of a few KB each (measured
@@ -221,7 +274,7 @@ object CheckpointedPipeline {
       // downstream scan of signatures/ (pairs payload, mapping, append's
       // index reads). AQE sizes the rebalanced partitions, so big buckets
       // still split into multiple adequately-sized files at scale.
-      Dedup.signatures(spark, Dedup.documents(transcripts), cfg)
+      Dedup.signatures(spark, placed.docs, cfg)
         .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
         .hint("rebalance", col("bucket"))
     }
@@ -286,9 +339,9 @@ object CheckpointedPipeline {
     *     the prior components). Equivalence is sbt-tested.
     *
     * Passes over the index (`signatures/`), each made once per append:
-    *   1. one listing, when the directory is opened with its known schema
-    *      (no schema-inference job; a footer check keeps a column mismatch
-    *      loud);
+    *   1. one listing, on the driver, when the directory is opened with its
+    *      known schema (no schema-inference or leaf-listing job; a footer
+    *      check keeps a column mismatch loud);
     *   2. the gate scan of its conv_id column (gates (b) and (c) below);
     *   3. the new×old probe scan: one narrow read of every member's
     *      (conv_id, bands, shingles, set_hash) against the broadcast band
@@ -304,9 +357,11 @@ object CheckpointedPipeline {
     * reuse of a mutated checkpoint is impossible.
     *
     * The new-batch fingerprint equals [[inputFingerprint]] of the batch but
-    * costs no pass of its own: it is observed (`Dataset.observe`) on the job
-    * that materializes the batch's signatures (only if the listener bus
-    * drops that observation does a pass recompute it). Observed metrics are
+    * costs no pass of its own: it is observed (`Dataset.observe`) on the
+    * first job that reads the batch — the assembly's layout pass (which then
+    * reads the observed columns too), or, for a batch with no layout pass,
+    * the job that materializes the batch's signatures (only if the listener
+    * bus drops that observation does a pass recompute it). Observed metrics are
     * at-least-once — a re-executed task can fold its rows in twice — so a
     * retry can change only the chain hash (into a key nothing matches: a
     * later run rebuilds), never a gate. No gate reads it: the lineage row
@@ -362,17 +417,18 @@ object CheckpointedPipeline {
     val priorRows = longField(priorChain, "rows")
 
     val t0 = System.nanoTime()
-    // the batch fingerprint is observed on the signature materialization
-    // below instead of costing a pass of its own
+    // the batch fingerprint is observed on the first job that reads the
+    // batch (the assembly's layout pass, else the signature materialization
+    // below) instead of costing a pass of its own
     val fpObs = Observation()
     val fpAggs = fingerprintAggs(newTranscripts)
-    val batchSigs = Dedup.signatures(spark,
-        Dedup.documents(newTranscripts.observe(fpObs, fpAggs.head, fpAggs.tail: _*)), cfg)
+    val placed = Assembly.placedDocs(newTranscripts.observe(fpObs, fpAggs.head, fpAggs.tail: _*))
+    val batchSigs = Dedup.signatures(spark, placed.docs, cfg)
       .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(nBuckets)).cast("int"))
-    // index pass 1, the listing: the index holds exactly the columns of the
-    // batch's signatures. Its pre-append files are remembered, so the
-    // lineage can count exactly the files this append adds. Both schema
-    // checks run here, before any Spark job.
+    // index pass 1, the listing, made once on the driver: the index holds
+    // exactly the columns of the batch's signatures. Its pre-append files
+    // are remembered, so the lineage can count exactly the files this
+    // append adds. Both schema checks run here, before any Spark job.
     val oldSigs = readKnown(spark, sigDir, batchSigs.schema, partitionCols = Set("bucket"))
     val indexFiles = oldSigs.inputFiles.toSet
     val priorClusters = readKnown(spark, cluDir, ClustersSchema)
@@ -469,13 +525,17 @@ object CheckpointedPipeline {
     Files.writeString(dirtyPath(workDir), s"""{"appending_fp":"$newFp","started_ms":${System.currentTimeMillis()}}""")
     // same REBALANCE-before-partitionBy as run()'s signatures stage: the
     // appended batch adds ≤ one adequately-sized file per bucket instead of
-    // (batch partitions × nBuckets) small ones
-    newSigs.hint("rebalance", col("bucket")).write.mode(SaveMode.Append).partitionBy("bucket").parquet(sigDir)
+    // (batch partitions × nBuckets) small ones. A one-partition batch (its
+    // count is known without a job) already writes ≤ one file per bucket
+    // from its single task, so it skips the rebalance's exchange.
+    val onePartition = newSigs.queryExecution.toRdd.getNumPartitions == 1
+    (if (onePartition) newSigs else newSigs.hint("rebalance", col("bucket")))
+      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(sigDir)
     // exact, from the footers of the files this append added — never from
     // an observation, since the next append's gate (b) checks against it
     val newRows = footerRows(spark, parquetFiles(spark, sigDir).filterNot(indexFiles))
     writeLineage(sigDir, "signatures", chainedHash, "transcripts+append",
-      priorRows + newRows, (System.nanoTime() - t0) / 1e9, nBuckets, bareCfgHash)
+      priorRows + newRows, (System.nanoTime() - t0) / 1e9, nBuckets, bareCfgHash, extra = assemblyLineage(placed))
     clusters.write.mode(SaveMode.Overwrite).parquet(cluDir)
     val out = readKnown(spark, cluDir, ClustersSchema)
     val rows = footerRows(spark, out.inputFiles.toSeq)

@@ -67,6 +67,10 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
     Files.readString(Paths.get(s"$workDir/pairs/_lineage.json")) should include(""""hot_buckets":""")
     // signatures laid out by stable id-hash bucket for per-bucket resume
     Files.list(Paths.get(s"$workDir/signatures")).iterator().hasNext shouldBe true
+    // the generator's range partitions hold whole conversations: assembled in place
+    lineageField(s"$workDir/signatures", "assembly_path") shouldBe "in_place"
+    lineageField(s"$workDir/signatures", "assembly_partitions") shouldBe
+      transcripts.rdd.getNumPartitions.toString
 
     val (c2, s2) = CheckpointedPipeline.run(spark, transcripts, cfg, workDir)
     all(s2.map(_.reused)) shouldBe true
@@ -350,6 +354,32 @@ class CheckpointedPipelineSpec extends AnyFunSuite with Matchers with BeforeAndA
       // its candidate set is empty, which now costs no job). A new job in
       // append must show up here.
       withClue(jobs.mkString("\n", "\n", "\n")) { jobs.size should be <= 21 }
+    } finally new Directory(new java.io.File(wd)).deleteRecursively()
+  }
+
+  test("job budget: a one-partition batch appended to a 64-bucket index runs no listing or rebalance job") {
+    val cfg = DedupConfig()
+    val (old, batch1, _) = splitCorpus()
+    val wd = Files.createTempDirectory("graft-ckpt-jobs64").toString
+    try {
+      // a round-robin input splits conversations: assembled through the exchange
+      CheckpointedPipeline.run(spark, old.repartition(3), cfg, wd, nBuckets = 64)
+      lineageField(s"$wd/signatures", "assembly_path") shouldBe "exchange"
+      lineageField(s"$wd/signatures", "assembly_partitions") shouldBe "8"
+      val batch = batch1.coalesce(1)
+      val (_, jobs) = JobBudget(spark)(CheckpointedPipeline.append(spark, batch, cfg, wd, nBuckets = 64))
+      // measured 19: the batch is assembled in place (layout pass + the
+      // signatures checkpoint, no exchange), the index is listed on the
+      // driver (no 64-task leaf-listing job), and the single-partition
+      // batch is written without a rebalance exchange — the signatures
+      // append and the clusters overwrite are one job each
+      withClue(jobs.mkString("\n", "\n", "\n")) {
+        jobs.size should be <= 19
+        jobs.filter(j => j.contains("tasks=  64") || j.contains("Listing leaf files")) shouldBe empty
+        jobs.count(_.contains("desc=parquet at CheckpointedPipeline")) shouldBe 2
+      }
+      lineageField(s"$wd/signatures", "assembly_path") shouldBe "in_place"
+      lineageField(s"$wd/signatures", "assembly_partitions") shouldBe "1"
     } finally new Directory(new java.io.File(wd)).deleteRecursively()
   }
 }

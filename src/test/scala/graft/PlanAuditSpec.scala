@@ -179,6 +179,20 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     }
   }
 
+  test("assembly of a clustered input: no Exchange in its plan") {
+    // the generator's range partitions each hold whole conversations
+    val t = graft.sources.TranscriptGen.df(spark, 100L)
+    for (docs <- Seq(Dedup.documents(t), graft.operators.Assembly.assemble(t),
+                     graft.operators.Assembly.assembleWithRoles(t))) {
+      val p = docs.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      p should not include "Exchange"
+      p should include("Sort")
+    }
+    // the same turns dealt round-robin: one exchange on conv_id
+    Dedup.documents(t.repartition(4)).queryExecution.explainString(ExplainMode.fromString("formatted")) should
+      include("hashpartitioning(conv_id")
+  }
+
   test("the flagship pipeline contains no CartesianProduct or BroadcastNestedLoopJoin") {
     val df = Dedup.pipeline(spark, graft.sources.TranscriptGen.df(spark, 100L), DedupConfig())
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
